@@ -21,10 +21,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from s_crawler_spark.plans.contract import QUERIES
-    return dict(QUERIES)
+    from s_crawler_spark.plans.contract import CONTRACT
+    return {name: build for name, (build, _) in CONTRACT.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from s_crawler_spark.plans.contract import build_oracles
-    return build_oracles()
+    from s_crawler_spark.plans.contract import CONTRACT
+    return {name: sql for name, (_, sql) in CONTRACT.items()}

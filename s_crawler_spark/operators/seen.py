@@ -48,7 +48,10 @@ _MIX = np.uint64(0x9E3779B97F4A7C15)
 # concentrated bloom position 0 (and ALL cuckoo primary buckets) into
 # 1/n_shards of each table: ~8x-congested cuckoo primaries fail kick
 # chains near design load, and the bloom fp rate ran ~2x its sizing.
-FILTER_REV = 2
+# rev 3: cuckoo fingerprints derive from the mixed key too — the raw key's
+# top 16 bits are 0 for every key below 2^48, so all such keys shared one
+# fingerprint and one bucket pair, and 9 of them overflowed a build.
+FILTER_REV = 3
 
 
 def auto_shard_count(n_keys: int,
@@ -134,7 +137,7 @@ _CK_MAX_KICKS = 500
 
 
 def _ck_fingerprint(keys: np.ndarray) -> np.ndarray:
-    fp = ((keys >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
+    fp = ((_mix64(keys) >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
     fp[fp == 0] = 1  # 0 marks an empty slot
     return fp
 

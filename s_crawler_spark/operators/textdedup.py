@@ -267,8 +267,11 @@ def duplicated_spans(docs: DataFrame, n: int = DUP_SPAN_N,
 
     w = words(F.col(text_col))
     grams = F.transform(_word_grams(w, n), md5_hash60)
+    # two consumers (the corpus-wide count and the mark join): checkpoint
+    # so the posexplode → md5 scan runs once, not once per branch
     occ = (docs.select(F.col(id_col),
-                       F.posexplode(grams).alias("pos", "gh")))
+                       F.posexplode(grams).alias("pos", "gh"))
+           .localCheckpoint(eager=False))
     dup = (occ.groupBy("gh").agg(F.count("*").alias("__c"))
            .filter(F.col("__c") >= min_count).select("gh"))
     marked = occ.join(dup, "gh").select(id_col, "pos")

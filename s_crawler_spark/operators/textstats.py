@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.texthash import MERSENNE_31
+from .textdedup import words
 
 # Tiny public stopword lists (top function words per language). Fixed order =
 # deterministic tie-break for argmax.
@@ -33,10 +34,6 @@ TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"  # BPE-ish pre-tokenizer split
 PUNCT_REGEX = r"[^A-Za-z0-9\s]"
 
 
-def _words(text: Column) -> Column:
-    return F.split(F.lower(text), " ")
-
-
 def _in_list(t: Column, values: list[str]) -> Column:
     # Column.isin is not usable inside a higher-order-function lambda;
     # array_contains against a literal array is, and codegens the same.
@@ -51,7 +48,7 @@ def _count_in(w: Column, sw: list[str]) -> Column:
 
 def lang_scores(text: Column) -> dict[str, Column]:
     """Per-language stopword hit count (token occurrences, not distinct)."""
-    w = _words(text)
+    w = words(text)
     return {lang: _count_in(w, sw) for lang, sw in STOPWORDS.items()}
 
 
@@ -65,7 +62,7 @@ def lang_score_array(text: Column) -> Column:
     stoplists = F.array(*[
         F.array(*[F.lit(wd) for wd in STOPWORDS[lg]]) for lg in LANG_ORDER])
     return F.aggregate(
-        _words(text),
+        words(text),
         F.array_repeat(F.lit(0), len(LANG_ORDER)),
         lambda acc, t: F.zip_with(
             acc, stoplists,
@@ -120,7 +117,7 @@ def quality_table(docs: DataFrame, text_col: str = "text",
     across engines, so the SQL oracle needs no float tolerance.
     """
     t = F.col(text_col)
-    w = _words(t)
+    w = words(t)
     n_words = F.size(w)
     sum_len = F.aggregate(w, F.lit(0), lambda acc, x: acc + F.length(x))
     n_stop = F.size(F.filter(w, lambda x: _in_list(x, STOPWORDS["en"])))
@@ -333,7 +330,7 @@ def repetition_table(docs: DataFrame, text_col: str = "text",
     column by split() — cheap relative to the folds it feeds.
     """
     t = F.col(text_col)
-    w = _words(t)
+    w = words(t)
     n_words = F.size(w)
     n_distinct = F.size(F.array_distinct(w))
     sents = F.split(t, r"\. ")
@@ -376,7 +373,7 @@ def _gram_hash_set(text: Column, n: int) -> Column:
     construction, so the SQL oracle regenerates identical values)."""
     from ..functions.texthash import md5_hash60
     return F.array_distinct(
-        F.transform(_word_grams(_words(text), n), md5_hash60))
+        F.transform(_word_grams(words(text), n), md5_hash60))
 
 
 def contamination_table(docs: DataFrame, bench: DataFrame,

@@ -1978,147 +1978,77 @@ SELECT a_id, b_id, round(cos, 4) AS cos_sim FROM scored WHERE cos >= {threshold}
 # Registry
 # ==========================================================================
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # The 14 queries below lead the registry deliberately: the driver's
-    # correctness sweep has recorded only the first 50 registry entries two
-    # rounds running (CORRECTNESS_r03/r04 both carry the same 50 keys while
-    # 64 are registered), so listing the never-driver-verified queries first
-    # rotates them into the sweep.  Every query keeps its exact DuckDB oracle
-    # regardless of position (tools/check_contract.py sweeps all 64).
-    "dedup_clusters": q_dedup_clusters,
-    "url_pagerank": q_url_pagerank,
-    "host_authority": q_host_authority,
-    "rank_admission": q_rank_admission,
-    "authority_budget": q_authority_budget,
-    "sitemap_ingest": q_sitemap_ingest,
-    "redirect_resolve": q_redirect_resolve,
-    "url_canonical": q_url_canonical,
-    "trap_features": q_trap_features,
-    "trap_hosts": q_trap_hosts,
-    "recrawl_schedule": q_recrawl_schedule,
-    "adaptive_policy": q_adaptive_policy,
-    "media_frames": q_media_frames,
-    "multiwave_crawl": q_multiwave_crawl,
-    "crawl_catalog": q_crawl_catalog,
-    "search_cards": q_search_cards,
-    "cards_dedup_first": q_cards_dedup_first,
-    "crawl_topk": q_crawl_topk,
-    "recency_topk": q_recency_topk,
-    "frontier_enqueue": q_frontier_enqueue,
-    "frontier_fifo": q_frontier_fifo,
-    "host_skew_stats": q_host_skew_stats,
-    "politeness_budget": q_politeness_budget,
-    "retry_backoff": q_retry_backoff,
-    "scalar_suite": q_scalar_suite,
-    "date_parsing": q_date_parsing,
-    "content_hashes": q_content_hashes,
-    "keyword_search": q_keyword_search,
-    "title_jaccard": q_title_jaccard,
-    "fetch_lineage": q_fetch_lineage,
-    "unique_filenames": q_unique_filenames,
-    "artifact_stats": q_artifact_stats,
-    "seen_dedup_bloom": q_seen_dedup_bloom,
-    "seen_dedup_cuckoo": q_seen_dedup_cuckoo,
-    "robots_filter": q_robots_filter,
-    "robots_policy": q_robots_policy,
-    "page_health": q_page_health,
-    "scalar_suite2": q_scalar_suite2,
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram": q_dedup_ngram,
-    "dedup_minhash_lsh": q_dedup_minhash,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_substring": q_dedup_substring,
-    "lang_id": q_lang_id,
-    "text_quality": q_text_quality,
-    "token_stats": q_token_stats,
-    "doc_fingerprint": q_fingerprint,
-    "doc_chunks": q_doc_chunks,
-    "pii_scrub": q_pii_scrub,
-    "doc_repetition": q_doc_repetition,
-    "benchmark_contam": q_benchmark_contam,
-    "quality_quantiles": q_quality_quantiles,
-    "sample_stratified": q_sample_stratified,
-    "shard_packing": q_shard_packing,
-    "embedding_norms": q_embedding_norms,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_topk_vectorized": q_ann_topk_vectorized,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_label_stats": q_embedding_label_stats,
-    "multimodal_meta": q_multimodal_meta,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_lsh_near_dup": q_ann_lsh_near_dup,
-    "simhash_near_pairs": q_simhash_near_pairs,
-    "dedup_agreement": q_dedup_agreement,
+CONTRACT: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    # name -> (Spark query function, exact DuckDB oracle SQL): one entry per
+    # query, so no query can exist without its oracle.  The 15 queries
+    # missing from CORRECTNESS_r05.json lead the registry: that sweep
+    # recorded only the first 50 entries, so the unrecorded ones go first.
+    # tools/check_contract.py sweeps all 65 regardless of order.
+    "benchmark_contam": (q_benchmark_contam, _sql_benchmark_contam()),
+    "quality_quantiles": (q_quality_quantiles, _sql_quality_quantiles()),
+    "sample_stratified": (q_sample_stratified, _sql_sample_stratified()),
+    "shard_packing": (q_shard_packing, SQL_SHARD_PACKING),
+    "embedding_norms": (q_embedding_norms, SQL_EMBEDDING_NORMS),
+    "ann_cosine_topk": (q_ann_cosine_topk, SQL_ANN_TOPK),
+    "ann_topk_vectorized": (q_ann_topk_vectorized, SQL_ANN_TOPK),
+    "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
+    "embedding_label_stats": (q_embedding_label_stats,
+                              SQL_EMBEDDING_LABEL_STATS),
+    "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
+    "ann_lsh_topk": (q_ann_lsh_topk, _sql_ann_lsh_topk()),
+    "ann_ivf_topk": (q_ann_ivf_topk, _sql_ann_ivf_topk()),
+    "ann_lsh_near_dup": (q_ann_lsh_near_dup, _sql_ann_lsh_near_dup()),
+    "simhash_near_pairs": (q_simhash_near_pairs, _sql_simhash_near_pairs()),
+    "dedup_agreement": (q_dedup_agreement, _sql_dedup_agreement()),
+    "dedup_clusters": (q_dedup_clusters, _sql_dedup_clusters()),
+    "url_pagerank": (q_url_pagerank, _sql_url_pagerank()),
+    "host_authority": (q_host_authority, _sql_host_authority()),
+    "rank_admission": (q_rank_admission, _sql_rank_admission()),
+    "authority_budget": (q_authority_budget, _sql_authority_budget()),
+    "sitemap_ingest": (q_sitemap_ingest, _sql_sitemap_ingest()),
+    "redirect_resolve": (q_redirect_resolve, _sql_redirect_resolve()),
+    "url_canonical": (q_url_canonical, _sql_url_canonical()),
+    "trap_features": (q_trap_features, _sql_trap_features()),
+    "trap_hosts": (q_trap_hosts, _sql_trap_hosts()),
+    "recrawl_schedule": (q_recrawl_schedule, _sql_recrawl_schedule()),
+    "adaptive_policy": (q_adaptive_policy, _sql_adaptive_policy()),
+    "media_frames": (q_media_frames, SQL_MEDIA_FRAMES),
+    "multiwave_crawl": (q_multiwave_crawl, SQL_MULTIWAVE),
+    "crawl_catalog": (q_crawl_catalog, SQL_CRAWL_CATALOG),
+    "search_cards": (q_search_cards, SQL_SEARCH_CARDS),
+    "cards_dedup_first": (q_cards_dedup_first, SQL_CARDS_DEDUP_FIRST),
+    "crawl_topk": (q_crawl_topk, SQL_CRAWL_TOPK),
+    "recency_topk": (q_recency_topk, SQL_RECENCY_TOPK),
+    "frontier_enqueue": (q_frontier_enqueue, SQL_FRONTIER_ENQUEUE),
+    "frontier_fifo": (q_frontier_fifo, SQL_FRONTIER_FIFO),
+    "host_skew_stats": (q_host_skew_stats, SQL_HOST_SKEW),
+    "politeness_budget": (q_politeness_budget, SQL_POLITENESS),
+    "retry_backoff": (q_retry_backoff, SQL_RETRY_BACKOFF),
+    "scalar_suite": (q_scalar_suite, SQL_SCALAR_SUITE),
+    "date_parsing": (q_date_parsing, SQL_DATE_PARSING),
+    "content_hashes": (q_content_hashes, SQL_CONTENT_HASHES),
+    "keyword_search": (q_keyword_search, SQL_KEYWORD_SEARCH),
+    "title_jaccard": (q_title_jaccard, SQL_TITLE_JACCARD),
+    "fetch_lineage": (q_fetch_lineage, SQL_FETCH_LINEAGE),
+    "unique_filenames": (q_unique_filenames, SQL_UNIQUE_FILENAMES),
+    "artifact_stats": (q_artifact_stats, SQL_ARTIFACT_STATS),
+    "seen_dedup_bloom": (q_seen_dedup_bloom, SQL_SEEN_DEDUP),
+    "seen_dedup_cuckoo": (q_seen_dedup_cuckoo, SQL_SEEN_DEDUP),
+    "robots_filter": (q_robots_filter, SQL_ROBOTS_FILTER),
+    "robots_policy": (q_robots_policy, SQL_ROBOTS_POLICY),
+    "page_health": (q_page_health, SQL_PAGE_HEALTH),
+    "scalar_suite2": (q_scalar_suite2, SQL_SCALAR_SUITE2),
+    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
+    "dedup_ngram": (q_dedup_ngram, SQL_DEDUP_NGRAM),
+    "dedup_minhash_lsh": (q_dedup_minhash, _sql_minhash()),
+    "dedup_simhash": (q_dedup_simhash, _sql_simhash()),
+    "dedup_substring": (q_dedup_substring, _sql_dedup_substring()),
+    "lang_id": (q_lang_id, _sql_lang_id()),
+    "text_quality": (q_text_quality, _sql_text_quality()),
+    "token_stats": (q_token_stats, SQL_TOKEN_STATS),
+    "doc_fingerprint": (q_fingerprint, _sql_fingerprint()),
+    "doc_chunks": (q_doc_chunks, SQL_DOC_CHUNKS),
+    "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
+    "doc_repetition": (q_doc_repetition, _sql_doc_repetition()),
 }
 
-
-def build_oracles() -> dict[str, str]:
-    return {
-        # Same leading-14 order as QUERIES (see note there).
-        "dedup_clusters": _sql_dedup_clusters(),
-        "url_pagerank": _sql_url_pagerank(),
-        "host_authority": _sql_host_authority(),
-        "rank_admission": _sql_rank_admission(),
-        "authority_budget": _sql_authority_budget(),
-        "sitemap_ingest": _sql_sitemap_ingest(),
-        "redirect_resolve": _sql_redirect_resolve(),
-        "url_canonical": _sql_url_canonical(),
-        "trap_features": _sql_trap_features(),
-        "trap_hosts": _sql_trap_hosts(),
-        "recrawl_schedule": _sql_recrawl_schedule(),
-        "adaptive_policy": _sql_adaptive_policy(),
-        "media_frames": SQL_MEDIA_FRAMES,
-        "multiwave_crawl": SQL_MULTIWAVE,
-        "crawl_catalog": SQL_CRAWL_CATALOG,
-        "search_cards": SQL_SEARCH_CARDS,
-        "cards_dedup_first": SQL_CARDS_DEDUP_FIRST,
-        "crawl_topk": SQL_CRAWL_TOPK,
-        "recency_topk": SQL_RECENCY_TOPK,
-        "frontier_enqueue": SQL_FRONTIER_ENQUEUE,
-        "frontier_fifo": SQL_FRONTIER_FIFO,
-        "host_skew_stats": SQL_HOST_SKEW,
-        "politeness_budget": SQL_POLITENESS,
-        "retry_backoff": SQL_RETRY_BACKOFF,
-        "scalar_suite": SQL_SCALAR_SUITE,
-        "date_parsing": SQL_DATE_PARSING,
-        "content_hashes": SQL_CONTENT_HASHES,
-        "keyword_search": SQL_KEYWORD_SEARCH,
-        "title_jaccard": SQL_TITLE_JACCARD,
-        "fetch_lineage": SQL_FETCH_LINEAGE,
-        "unique_filenames": SQL_UNIQUE_FILENAMES,
-        "artifact_stats": SQL_ARTIFACT_STATS,
-        "seen_dedup_bloom": SQL_SEEN_DEDUP,
-        "seen_dedup_cuckoo": SQL_SEEN_DEDUP,
-        "robots_filter": SQL_ROBOTS_FILTER,
-        "robots_policy": SQL_ROBOTS_POLICY,
-        "page_health": SQL_PAGE_HEALTH,
-        "scalar_suite2": SQL_SCALAR_SUITE2,
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "dedup_ngram": SQL_DEDUP_NGRAM,
-        "dedup_minhash_lsh": _sql_minhash(),
-        "dedup_simhash": _sql_simhash(),
-        "dedup_substring": _sql_dedup_substring(),
-        "lang_id": _sql_lang_id(),
-        "text_quality": _sql_text_quality(),
-        "token_stats": SQL_TOKEN_STATS,
-        "doc_fingerprint": _sql_fingerprint(),
-        "doc_chunks": SQL_DOC_CHUNKS,
-        "pii_scrub": SQL_PII_SCRUB,
-        "doc_repetition": _sql_doc_repetition(),
-        "benchmark_contam": _sql_benchmark_contam(),
-        "quality_quantiles": _sql_quality_quantiles(),
-        "sample_stratified": _sql_sample_stratified(),
-        "shard_packing": SQL_SHARD_PACKING,
-        "embedding_norms": SQL_EMBEDDING_NORMS,
-        "ann_cosine_topk": SQL_ANN_TOPK,
-        "ann_topk_vectorized": SQL_ANN_TOPK,
-        "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-        "embedding_label_stats": SQL_EMBEDDING_LABEL_STATS,
-        "multimodal_meta": SQL_MULTIMODAL_META,
-        "ann_lsh_topk": _sql_ann_lsh_topk(),
-        "ann_ivf_topk": _sql_ann_ivf_topk(),
-        "ann_lsh_near_dup": _sql_ann_lsh_near_dup(),
-        "simhash_near_pairs": _sql_simhash_near_pairs(),
-        "dedup_agreement": _sql_dedup_agreement(),
-    }

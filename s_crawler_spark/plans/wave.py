@@ -1,6 +1,6 @@
 """The crawl wave — one DataFrame job per wave, plus the resumable wave loop.
 
-Dataflow per wave (north rule): frontier dequeue → bloom/cuckoo dedup →
+Dataflow per wave (north rule): frontier dequeue → bloom dedup →
 fetch → parse/extract → link discovery → frontier enqueue, all state
 committed as one snapshot set per wave (store.SnapshotStore).
 
@@ -26,7 +26,6 @@ Plan shape / scale notes (verified via .explain — see BENCH notes):
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
@@ -45,6 +44,12 @@ from ..operators import traps as tp
 from ..sources.store import SnapshotStore
 
 LOGICAL_T0 = datetime(2024, 6, 1)
+
+# compact_every="auto" thresholds: compact when the frontier delta chain's
+# accumulated rows reach COMPACT_FRAC_BP basis points of the live frontier,
+# or when the chain reaches COMPACT_CHAIN_CAP snapshots
+COMPACT_FRAC_BP = 2500
+COMPACT_CHAIN_CAP = 64
 
 
 def _content_fp(df: DataFrame, *cols) -> tuple:
@@ -271,16 +276,10 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
           host_policy: DataFrame | None = None,
           n_shards: int | str = 8,
           max_waves: int = 50,
-          shard_target_items: int = sn.SHARD_TARGET_ITEMS,
-          filter_kind: str = "bloom",
-          salt_buckets: int | None = None,
-          resume: bool = True,
           adaptive_delay: bool = False,
           expire_keep: int | None = None,
           trap_guard: bool = False,
           compact_every: int | str = 8,
-          compact_frac_bp: int = 2500,
-          compact_chain_cap: int = 64,
           priority_df: DataFrame | None = None) -> DataFrame:
     """Run (or resume) a full crawl to completion. Every wave commits
     frontier / seen / seen_shards / articles / fetch_log snapshots; killing
@@ -343,8 +342,8 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
 
     ``n_shards="auto"`` sizes the seen-filter shard layout from the live
     seen-set size instead of a fixed modulus: each wave targets
-    ``shard_target_items`` keys per shard (seen.auto_shard_count — smallest
-    power of two, GROW-ONLY so an established layout never churns
+    ``seen.SHARD_TARGET_ITEMS`` keys per shard (seen.auto_shard_count —
+    smallest power of two, GROW-ONLY so an established layout never churns
     downward). Growth reuses the existing layout-change machinery — the
     wave whose desired count exceeds the stored one full-rebuilds the
     table under the new modulus, every other wave folds touched-shard
@@ -356,9 +355,9 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
 
     ``compact_every="auto"`` replaces the fixed compaction cadence with the
     LSM size-ratio policy: compact when the frontier delta chain's
-    accumulated rows reach ``compact_frac_bp`` basis points of the live
-    frontier (default 25%), or when the chain reaches
-    ``compact_chain_cap`` snapshots (bounds merge-on-read compose cost and
+    accumulated rows reach ``COMPACT_FRAC_BP`` basis points of the live
+    frontier (25%), or when the chain reaches ``COMPACT_CHAIN_CAP``
+    snapshots (bounds merge-on-read compose cost and
     manifest length regardless of row ratio). A fixed cadence rewrites the
     O(total) base every N waves — at a 10^10-row frontier with 10^6-row
     waves that is ~10^9 rows/wave of amortized write amplification, which
@@ -372,24 +371,11 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     pure function of committed state (legacy delta snapshots without the
     meta count as 0 rows; the chain cap still bounds them).
 
-    ``filter_kind`` selects the seen-filter kernel for NEW shard builds:
-    ``"bloom"`` (default — densest at pure-membership workloads) or
-    ``"cuckoo"`` (same probe surface, supports deletion for re-crawl
-    eviction). Incremental folds always honor each stored blob's OWN kind
-    (operators/seen.update_shards), so resuming an existing store with a
-    different ``filter_kind`` only switches kinds at the next full
-    rebuild (layout change or compaction) — never by corrupting an
-    existing blob. Either kind is exact end-to-end: the probe is advisory
-    and the exact anti-join backstop is unchanged.
-
     Returns the final articles catalog in crawl order.
     """
     auto_shards = isinstance(n_shards, str)
     if auto_shards and n_shards != "auto":
         raise ValueError(f"n_shards must be an int or 'auto', got {n_shards!r}")
-    if filter_kind not in ("bloom", "cuckoo"):
-        raise ValueError(
-            f"filter_kind must be 'bloom' or 'cuckoo', got {filter_kind!r}")
     compact_auto = isinstance(compact_every, str)
     if compact_auto and compact_every != "auto":
         raise ValueError(
@@ -406,41 +392,25 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     # arithmetic per wave, seeded by ONE scan on the first wave of this
     # process — see the fetch_log commit below). Keyed by status string.
     status_counts: dict[str, int] | None = None
-    if resume:
-        # a wave's ~10 per-table commits are individually atomic but not
-        # jointly: a crash between two of them leaves a TORN wave (e.g.
-        # frontier rows marked done whose articles snapshot never landed —
-        # rows a latest_wave+1 resume would silently lose). The store's
-        # durable wave pointer is flipped only after a wave's LAST commit;
-        # roll back any unacknowledged snapshots and re-run the torn wave
-        # from the committed boundary (commits are wave-keyed idempotent
-        # overwrites, built for exactly this re-run).
-        boundary = store.rollback_to_committed()
-        if store.committed_wave() is None:
-            # first pointer-era crawl over this store: stamp the inferred
-            # boundary (legacy store / external frontier seed), or arm the
-            # pointer at −1 on an empty store so even a crash inside wave 0
-            # rolls back cleanly instead of leaving a torn first wave
-            store.mark_wave_committed(boundary if boundary is not None else -1)
-    if not resume and store.latest_wave("frontier") is not None:
-        # starting a FRESH crawl into a used store would re-commit wave 0
-        # while the old store's later-wave snapshots stay newest in the
-        # manifest — every subsequent read would compose the STALE state
-        # over the new wave's. Idempotent re-commit is for re-running the
-        # latest (crashed) wave via resume=True, never for restarting;
-        # a fresh crawl needs a fresh store root.
-        raise ValueError(
-            "resume=False on a store with committed waves would interleave "
-            "new snapshots under stale ones; use a fresh store root "
-            "(or resume=True to continue)")
-    if not resume and store.committed_wave() is None:
-        store.mark_wave_committed(-1)  # arm the pointer before wave 0
-    if resume and store.latest_wave("frontier") is not None:
+    # a wave's ~10 per-table commits are individually atomic but not
+    # jointly: a crash between two of them leaves a TORN wave (e.g.
+    # frontier rows marked done whose articles snapshot never landed —
+    # rows a latest_wave+1 resume would silently lose). The store's
+    # durable wave pointer is flipped only after a wave's LAST commit;
+    # roll back any unacknowledged snapshots and re-run the torn wave
+    # from the committed boundary (commits are wave-keyed idempotent
+    # overwrites, built for exactly this re-run).
+    boundary = store.rollback_to_committed()
+    if store.committed_wave() is None:
+        # first crawl over this store: stamp an external frontier seed's
+        # wave, or arm the pointer at −1 on an empty store so even a crash
+        # inside wave 0 rolls back cleanly instead of leaving a torn wave
+        store.mark_wave_committed(boundary if boundary is not None else -1)
+    if store.latest_wave("frontier") is not None:
         # resume from the COMMITTED pointer, not latest_wave: empty-delta
         # waves skip their frontier commit, so a table's newest wave can
         # legitimately lag the last completed wave
-        start_wave = (boundary if boundary is not None
-                      else store.latest_wave("frontier")) + 1
+        start_wave = boundary + 1
         frontier_df = store.read(spark, "frontier")
         catalog = store.read(spark, "articles")
         seen_df = store.read(spark, "seen")
@@ -467,9 +437,10 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
                     .localCheckpoint(eager=False)
                 trap_base_ok = True
             else:
-                # table absent (store predates incremental trap state) or
-                # lagging a wave that moved the counts (guard toggled off
-                # for waves whose enqueues/departures were never folded):
+                # table absent (earlier crawl() calls ran without the
+                # guard) or lagging a wave that moved the counts (guard
+                # toggled off for waves whose enqueues/departures were
+                # never folded):
                 # the stored counts have drifted from the actual backlog,
                 # so re-seed from the frontier with ONE O(pending) scan
                 # this process — the same recovery rule as status_counts
@@ -553,31 +524,17 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             (s["meta"].get("rules_fp")
              for s in reversed(store.snapshots("frontier"))
              if s.get("meta", {}).get("rules_fp") is not None), None)
-        needs_robots = ("robots_ok" not in frontier_df.columns
-                        or stored_fp != rules_fp)
-        needs_bucket = "next_eligible_bucket" not in frontier_df.columns
-        if needs_robots:
-            # legacy store (frontier predates the stored robots bit) or the
-            # rules CHANGED since the bits were stored: re-decorate with
-            # the current rules — one O(total) pass per upgrade/change —
-            # and force the next frontier commit FULL so the re-decorated
-            # values persist and a delta chain never mixes schemas
-            # (compose unions snapshots by name)
-            frontier_df = po.decorate_robots_ok(
-                frontier_df.drop("robots_ok"), rules_collapsed,
-                pre_collapsed=True)
-        if needs_bucket:
-            # legacy store predating the coarse admission-scan partition
-            # column: derive it once (cheap flooring; same forced-full rule)
-            frontier_df = frontier_df.withColumn(
-                "next_eligible_bucket",
-                fr.eligible_bucket(F.col("next_eligible")))
-        if needs_robots or needs_bucket:
-            # the migrated frame feeds several consumers this wave
-            # (eligible_pending scan, the `changed` semi-join, the full
+        if stored_fp != rules_fp:
+            # the rules CHANGED since the bits were stored: re-decorate with
+            # the current rules — one O(total) pass per change — and force
+            # the next frontier commit FULL so the re-decorated values
+            # persist. The re-decorated frame feeds several consumers this
+            # wave (eligible_pending scan, the `changed` semi-join, the full
             # record_results commit, the n_future check): checkpoint so the
             # interpreted O(total) robots fold runs once, not per consumer
-            frontier_df = frontier_df.localCheckpoint(eager=False)
+            frontier_df = po.decorate_robots_ok(
+                frontier_df.drop("robots_ok"), rules_collapsed,
+                pre_collapsed=True).localCheckpoint(eager=False)
             frontier_needs_full = True
 
     # discovery fingerprint (per process): a cheap url-COLUMN aggregate over
@@ -752,8 +709,6 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             policy = host_policy
         batch = po.compose_wave(pending, policy, wave_seconds,
                                 robots_col="robots_ok")
-        if salt_buckets:
-            batch = fr.salt_partitions(batch, salt_buckets)
         # two consumers below (hydration key set + join left side): lazy
         # checkpoint stops the two-window admission plan re-executing
         batch = batch.localCheckpoint(eager=False)
@@ -860,22 +815,22 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
                           + status_counts.get(fr.STATUS_FAILED, 0))
             ns_commit = max(stored_ns or 1,
                             sn.auto_shard_count(n_seen_now,
-                                                shard_target_items))
+                                                sn.SHARD_TARGET_ITEMS))
         else:
             ns_commit = n_shards
 
         # auto-compaction: the LSM size-ratio trigger, finalized now that
         # this wave's delta is counted. Compact when the chain's
         # accumulated delta rows (including this wave's) reach
-        # compact_frac_bp of the live frontier — so every base rewrite is
+        # COMPACT_FRAC_BP of the live frontier — so every base rewrite is
         # amortized against the deltas that earned it — or when the chain
         # hits the hard cap that bounds merge-on-read compose cost. Pure
         # counter arithmetic; no extra jobs.
         if compact_auto and not is_full and n_delta:
             total_rows = sum(status_counts.values())
-            is_full = (chain_len + 1 > compact_chain_cap
+            is_full = (chain_len + 1 > COMPACT_CHAIN_CAP
                        or (delta_since_full + n_delta) * 10000
-                       >= total_rows * compact_frac_bp)
+                       >= total_rows * COMPACT_FRAC_BP)
 
         # commit this wave's state (checkpoint = resumability) as ONE
         # multi-table transaction: the task list is built single-threaded
@@ -919,8 +874,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             commit_task(seen_all, "seen")
             commit_task(cand_all, "candidates")
             # headroom so the following delta waves can fold keys in place
-            commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0,
-                                        kind=filter_kind),
+            commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0),
                         "seen_shards", meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
         else:
             # empty-delta skips: delta_agg told us exactly what changed.
@@ -948,16 +902,15 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
                 # under the old modulus (persistent false negatives) —
                 # rebuild the whole table once under the current layout,
                 # O(seen) exactly once per layout change
-                commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0,
-                                        kind=filter_kind),
+                commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0),
                             "seen_shards", meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
             elif n_term:
                 # fold this wave's new keys into ONLY the shards they touch;
                 # untouched blobs are carried forward by the manifest, unread
                 commit_task(sn.update_shards(shards_df,
                                              seen_delta.select("url_hash"),
-                                             seen_all, ns_commit, headroom=2.0,
-                                             kind=filter_kind),
+                                             seen_all, ns_commit,
+                                             headroom=2.0),
                             "seen_shards", mode="delta", key=["shard_id"],
                             meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
 
@@ -1024,11 +977,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             store.commit(df, name, wave, **kw)
             return (wave, name, int((time.perf_counter() - t0) * 1000))
 
-        # pool width is an ops knob (SPARK_GRAFT_COMMIT_POOL; 1 = the
-        # serialized legacy shape, kept for interleaved A/B measurement)
-        n_workers = min(int(os.environ.get("SPARK_GRAFT_COMMIT_POOL", "8")),
-                        len(tasks))
-        with ThreadPoolExecutor(max_workers=max(1, n_workers)) as pool:
+        with ThreadPoolExecutor(max_workers=min(8, len(tasks))) as pool:
             phase_ms = list(pool.map(_run_commit, tasks))
         store.commit(
             spark.createDataFrame(phase_ms, "wave int, phase string, ms long"),
@@ -1056,7 +1005,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         # retained view is the same state, so cross-wave lineage stays
         # bounded either way)
         committed_tables = {name for name, _, _ in tasks}
-        frontier_needs_full = False  # any forced schema-upgrade full landed
+        frontier_needs_full = False  # any forced re-decoration full landed
         if "frontier" in committed_tables:
             frontier_df = store.read(spark, "frontier")
         if "articles" in committed_tables:

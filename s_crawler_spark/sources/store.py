@@ -108,13 +108,6 @@ class SnapshotStore:
     # the committed boundary (commits are wave-keyed idempotent overwrites,
     # built for exactly this re-run).
 
-    # tables the crawl loop commits EVERY wave regardless of feature flags —
-    # the legacy-store fallback (no pointer file) infers the newest COMPLETE
-    # wave as the min of their latest waves (flag-gated tables like
-    # host_policy / trap_state may legitimately lag and are excluded)
-    WAVE_TABLES = ("frontier", "articles", "seen", "candidates",
-                   "seen_shards", "fetch_log", "lineage", "phase_log")
-
     def _committed_path(self) -> str:
         return os.path.join(self.root, "COMMITTED.json")
 
@@ -129,7 +122,7 @@ class SnapshotStore:
         os.replace(tmp, self._committed_path())
 
     def committed_wave(self) -> int | None:
-        """Newest durably-committed wave, or None (fresh or legacy store)."""
+        """Newest durably-committed wave, or None (no crawl has run)."""
         try:
             with open(self._committed_path()) as f:
                 return json.load(f)["wave"]
@@ -140,64 +133,31 @@ class SnapshotStore:
         """Drop every snapshot of every table newer than the committed wave
         pointer (torn by a mid-wave crash — never acknowledged, so removing
         them is invisible to any reader that followed the protocol), and
-        return the committed wave (None = nothing committed: the store is
-        fresh, or the crash landed inside wave 0 / a legacy store's very
-        first wave — resume restarts from wave 0).
+        return the committed wave (−1 = the crash landed inside wave 0:
+        resume restarts from wave 0).
 
-        Legacy stores (predating the pointer file) fall back to
-        ``min(latest_wave(t))`` over the WAVE_TABLES that exist: the old
-        loop committed that whole set every wave (frontier FIRST), so the
-        min over the present ones is the newest wave whose commits all
-        landed — which also heals a legacy store torn by the old
-        frontier-first protocol (the orphaned frontier snapshot is rolled
-        back and the wave re-runs instead of losing its articles), and
-        leaves an externally-seeded store (a frontier committed directly,
-        no sibling tables yet) untouched. The one case the fallback cannot
-        see — a legacy store torn inside its very FIRST wave, before some
-        sibling table existed at all — is closed for every pointer-era
-        store: the crawl loop arms the pointer (wave −1) before its first
-        commit.
+        A store without the pointer file was never written by the crawl
+        loop (it arms the pointer before its first commit), so it holds
+        only external seeding — e.g. a frontier or a host_policy dimension
+        committed directly: nothing is dropped, and the return value is
+        the frontier's latest wave (None: no frontier, start at wave 0).
         """
         import shutil
 
         cw = self.committed_wave()
-        inferred = cw is None
         if cw is None:
-            waves = [w for w in (self.latest_wave(t) for t in self.WAVE_TABLES)
-                     if w is not None]
-            cw = min(waves) if waves else None
-        if cw is None:
-            # no pointer AND no loop-written wave tables: the loop never ran
-            # on this store (it arms the pointer before its very first
-            # commit), so every snapshot present — e.g. a pre-seeded
-            # host_policy dimension — is external seeding, not a torn wave.
-            # Nothing to roll back; dropping them would silently delete
-            # user data on the default resume=True path.
-            return None
-        if inferred:
-            # the min() inference is only sound for true legacy stores —
-            # the pre-delta loop committed every WAVE_TABLE every wave, so
-            # min = the newest fully-landed wave. A pointer-less store
-            # containing ANY delta snapshot was written by the sparse-
-            # commit loop (which always arms the pointer): its per-table
-            # numbering legitimately lags (unchanged tables skip commits),
-            # so min() would land on an OLD wave and rmtree durably
-            # committed snapshots — and with expiry in play could strand a
-            # table past its only surviving full base. Fail safe instead.
-            would_drop = any(s["wave"] > cw
-                             for t in self.tables()
-                             for s in self.snapshots(t))
-            has_delta = any(s.get("mode", "full") == "delta"
-                            for t in self.tables()
-                            for s in self.snapshots(t))
-            if would_drop and has_delta:
+            # only crawl() writes deltas, and it writes the pointer first:
+            # a delta without a pointer means the pointer was lost (partial
+            # copy?), and the wave it named cannot be recovered from here
+            if any(s.get("mode", "full") == "delta"
+                   for t in self.tables() for s in self.snapshots(t)):
                 raise RuntimeError(
                     "store has delta snapshots but no COMMITTED.json wave "
-                    "pointer (lost in a partial copy?): refusing the "
-                    "legacy min-wave rollback, which would delete "
-                    "committed sparse-numbered snapshots. Restore the "
-                    "pointer file, or write one naming the last known "
-                    "good wave, and resume again.")
+                    "pointer (lost in a partial copy?): refusing to guess "
+                    "the committed wave. Restore the pointer file, or "
+                    "write one naming the last known good wave, and "
+                    "resume again.")
+            return self.latest_wave("frontier")
         for t in self.tables():
             manifest = self._load_manifest(t)
             snaps = manifest["snapshots"]
@@ -210,7 +170,7 @@ class SnapshotStore:
             # wave's re-run overwrites (same snap id over the pruned
             # manifest) — never a manifest pointing at deleted files
             self._write_manifest(t, manifest)
-            live = {os.path.basename(s["path"]) for s in kept}
+            live = {s["path"] for s in kept}
             tdir = os.path.join(self.root, t)
             for d in os.listdir(tdir):
                 if d.startswith("snap-") and d not in live:
@@ -279,12 +239,8 @@ class SnapshotStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        # manifests record only the snapshot dir BASENAME: every reader
-        # resolves it against the CURRENT root (_snap_dir), so persisting
-        # the writer's absolute path would be a misleading second source
-        # of truth that breaks the moment a store directory is copied.
-        # (_snap_dir basenames defensively, so manifests written by older
-        # absolute-path builds keep reading correctly.)
+        # manifests record the snapshot dir relative to the table dir, so
+        # a copied store directory reads its own files (_snap_dir)
         entry = {"id": snap_id, "wave": wave, "path": f"snap-{snap_id}",
                  "mode": mode, "meta": meta or {}}
         if key is not None:
@@ -298,14 +254,6 @@ class SnapshotStore:
         manifest["snapshots"].sort(key=lambda s: s["id"])
         self._write_manifest(table, manifest)
         return snap_id
-
-    def commit_delta(self, df: DataFrame, table: str, wave: int,
-                     key: list[str] | None = None,
-                     meta: dict | None = None,
-                     delete_where: str | None = None) -> int:
-        """Sugar for ``commit(..., mode='delta', key=key)``."""
-        return self.commit(df, table, wave, meta=meta, mode="delta", key=key,
-                           delete_where=delete_where)
 
     @staticmethod
     def _compose(spark: SparkSession, snaps: list[dict]) -> DataFrame:
@@ -386,16 +334,10 @@ class SnapshotStore:
         return base.unionByName(du.drop("__ord", "__keyed"))
 
     def _snap_dir(self, table: str, entry: dict) -> str:
-        """A snapshot entry's directory resolved against THIS store's root.
-        Manifests record the snapshot dir basename (older builds recorded
-        the writer's absolute path), and a store directory must be
-        relocatable — backup/restore and crash-copy resume read a COPY of
-        the root, and following a stored absolute path would read (or
-        dangle on) the original writer's files. Reads therefore join the
-        entry's basename onto the current root — the same rule
-        ``expire_snapshots``/``rollback_to_committed`` already use when
-        deleting orphans."""
-        return os.path.join(self.root, table, os.path.basename(entry["path"]))
+        """A snapshot entry's directory resolved against THIS store's root,
+        so a store directory stays relocatable (backup/restore and
+        crash-copy resume read a COPY of the root)."""
+        return os.path.join(self.root, table, entry["path"])
 
     def read(self, spark: SparkSession, table: str,
              snapshot: int | None = None,
@@ -493,10 +435,7 @@ class SnapshotStore:
             kept, dropped = snaps[cutoff:], snaps[:cutoff]
             manifest["snapshots"] = kept
             self._write_manifest(t, manifest)
-            # compare by snapshot BASENAME, not full path: a store opened
-            # via a differently-spelled root ("./data" vs "data") must not
-            # mistake live snapshots for orphans
-            live = {os.path.basename(s["path"]) for s in kept}
+            live = {s["path"] for s in kept}
             tdir = os.path.join(self.root, t)
             for d in os.listdir(tdir):  # includes prior-crash orphans
                 if d.startswith("snap-") and d not in live:

@@ -170,20 +170,6 @@ def test_rollback_drops_only_uncommitted(spark, tmp_path):
     assert sorted(d for d in dirs if d.startswith("snap-")) == ["snap-0"]
 
 
-def test_rollback_legacy_store_infers_min_wave(spark, tmp_path):
-    """A store predating the pointer file: the newest COMPLETE wave is the
-    min of the unconditional tables' latest waves — which also heals a
-    legacy store torn by the old frontier-FIRST commit order."""
-    st = SnapshotStore(str(tmp_path / "legacy"))
-    one = spark.range(1).select(F.lit("a").alias("k"))
-    for t in SnapshotStore.WAVE_TABLES:
-        st.commit(one, t, 0)
-    st.commit(one, "frontier", 1)  # old protocol: frontier first, then kill
-    assert st.committed_wave() is None
-    assert st.rollback_to_committed() == 0
-    assert st.latest_wave("frontier") == 0
-
-
 def test_rollback_preserves_external_frontier_seed(spark, tmp_path):
     """An externally-seeded store (a frontier committed directly, no
     sibling tables) is not a torn wave — the seed must survive rollback."""
@@ -195,19 +181,18 @@ def test_rollback_preserves_external_frontier_seed(spark, tmp_path):
 
 
 def test_relocated_store_reads_its_own_files(spark, tmp_path):
-    """Manifests record the writer's absolute snapshot paths, but reads
-    must resolve against the CURRENT root: a copied store (backup/restore,
-    crash-copy resume) read from its new location must never follow the
-    stored path back into the original root — with the original deleted
-    that dangles (PATH_NOT_FOUND), and with it alive it silently reads
-    another store's files."""
+    """Reads resolve snapshot paths against the CURRENT root: a copied
+    store (backup/restore, crash-copy resume) read from its new location
+    must never reach back into the original root — with the original
+    deleted that dangles (PATH_NOT_FOUND), and with it alive it silently
+    reads another store's files."""
     src = SnapshotStore(str(tmp_path / "orig"))
     one = spark.range(3).select(F.col("id").alias("k"),
                                 F.lit("v0").alias("v"))
     src.commit(one, "t", 0)
-    src.commit_delta(
+    src.commit(
         spark.range(1).select(F.col("id").alias("k"), F.lit("v1").alias("v")),
-        "t", wave=1, key=["k"])
+        "t", wave=1, mode="delta", key=["k"])
     shutil.copytree(str(tmp_path / "orig"), str(tmp_path / "moved"))
     shutil.rmtree(str(tmp_path / "orig"))
     moved = SnapshotStore(str(tmp_path / "moved"))
@@ -224,11 +209,10 @@ def test_rollback_empty_store_is_noop(tmp_path):
 
 
 def test_rollback_preserves_nonwave_only_seed(spark, tmp_path):
-    """A store holding ONLY non-wave tables (e.g. a pre-seeded host_policy
+    """A store holding ONLY dimension tables (e.g. a pre-seeded host_policy
     dimension, committed before the loop ever ran) has no pointer and no
-    WAVE_TABLES to infer one from — that is external seeding, not a torn
-    wave. rollback (which crawl's default resume=True always runs first)
-    must leave it untouched, not wipe it."""
+    frontier — that is external seeding, not a torn wave. rollback (which
+    crawl always runs first) must leave it untouched, not wipe it."""
     st = SnapshotStore(str(tmp_path / "dims"))
     one = spark.range(1).select(F.lit("h").alias("host"))
     st.commit(one, "host_policy", 0)
@@ -253,35 +237,22 @@ def test_armed_pointer_rolls_back_torn_wave_zero(spark, tmp_path):
 
 
 def test_pointerless_delta_store_refuses_min_wave_rollback(spark, tmp_path):
-    """The min(latest_wave) fallback is only sound for true legacy stores
-    (pre-delta loop: every WAVE_TABLE committed every wave). A store with
-    DELTA snapshots was written by the sparse-commit loop, whose per-table
-    numbering legitimately lags — if its pointer is lost (partial copy),
-    min() would land on an old wave and DELETE durably committed
-    snapshots. Rollback must refuse instead of destroying data; a no-op
-    fallback (nothing newer than min) stays allowed."""
+    """Only the crawl loop writes deltas, and it writes the pointer before
+    its first commit: a store with DELTA snapshots but no pointer lost it
+    (partial copy). Its per-table numbering legitimately lags (unchanged
+    tables skip commits), so no committed wave can be inferred from it —
+    rollback must refuse instead of guessing and deleting data."""
     st = SnapshotStore(str(tmp_path / "sparse"))
     one = spark.range(1).select(F.lit("a").alias("k"))
-    for t in SnapshotStore.WAVE_TABLES:
+    for t in ("frontier", "articles", "seen", "candidates"):
         st.commit(one, t, 0)
     # sparse delta era: only the frontier moved on waves 1-2
-    st.commit_delta(one, "frontier", wave=1, key=["k"])
-    st.commit_delta(one, "frontier", wave=2, key=["k"])
-    os.remove(os.path.join(str(tmp_path / "sparse"), "COMMITTED.json")) \
-        if os.path.exists(os.path.join(str(tmp_path / "sparse"),
-                                       "COMMITTED.json")) else None
+    st.commit(one, "frontier", wave=1, mode="delta", key=["k"])
+    st.commit(one, "frontier", wave=2, mode="delta", key=["k"])
+    assert st.committed_wave() is None
     with pytest.raises(RuntimeError, match="delta snapshots but no"):
         st.rollback_to_committed()
     # with the pointer restored the same store rolls back fine
     st.mark_wave_committed(1)
     assert st.rollback_to_committed() == 1
     assert st.latest_wave("frontier") == 1
-
-    # all-full legacy store: the fallback still works (and still heals
-    # the old frontier-first torn wave)
-    lg = SnapshotStore(str(tmp_path / "legacy2"))
-    for t in SnapshotStore.WAVE_TABLES:
-        lg.commit(one, t, 0)
-    lg.commit(one, "frontier", 1)  # torn frontier-first wave 1
-    assert lg.rollback_to_committed() == 0
-    assert lg.latest_wave("frontier") == 0

@@ -12,7 +12,7 @@ import re
 import string
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from s_crawler_spark.functions import htmlsel
@@ -48,7 +48,12 @@ def test_bloom_fp_rate_bounded(keys, probes):
     assert hits <= max(5, 0.35 * len(others))
 
 
+# keys below 2^48 used to share one raw-key fingerprint and bucket pair
+SMALL_KEYS = [29, 82, 132, 173, 11051, 19499, 54482, 56135, 57703]
+
+
 @given(keys_strategy)
+@example(SMALL_KEYS)
 @settings(max_examples=50, deadline=None)
 def test_cuckoo_never_false_negative(keys):
     arr = np.array(keys, dtype=np.uint64)
@@ -58,6 +63,7 @@ def test_cuckoo_never_false_negative(keys):
 
 
 @given(keys_strategy)
+@example(SMALL_KEYS)
 @settings(max_examples=30, deadline=None)
 def test_cuckoo_delete_removes_only_deleted(keys):
     arr = np.array(keys, dtype=np.uint64)

@@ -27,8 +27,8 @@ def _state(spark, store, table, **kw):
 def test_append_delta_compose(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1)
-    st.commit_delta(_df(spark, [{"k": 3, "v": "c"}]), "t", wave=2)
+    st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, mode="delta")
+    st.commit(_df(spark, [{"k": 3, "v": "c"}]), "t", wave=2, mode="delta")
     assert _state(spark, st, "t") == [(1, "a"), (2, "b"), (3, "c")]
 
 
@@ -36,18 +36,20 @@ def test_keyed_delta_upsert_newest_wins(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]), "t", wave=0)
     # wave 1 updates k=1 and inserts k=3; wave 2 updates k=1 again
-    st.commit_delta(_df(spark, [{"k": 1, "v": "a1"}, {"k": 3, "v": "c"}]),
-                    "t", wave=1, key=["k"])
-    st.commit_delta(_df(spark, [{"k": 1, "v": "a2"}]), "t", wave=2, key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "a1"}, {"k": 3, "v": "c"}]),
+              "t", wave=1, mode="delta", key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "a2"}]), "t", wave=2, mode="delta",
+              key=["k"])
     assert _state(spark, st, "t") == [(1, "a2"), (2, "b"), (3, "c")]
 
 
 def test_time_travel_across_delta_chain(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)
-    sid1 = st.commit_delta(_df(spark, [{"k": 1, "v": "a1"}]), "t", wave=1,
-                           key=["k"])
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=2, key=["k"])
+    sid1 = st.commit(_df(spark, [{"k": 1, "v": "a1"}]), "t", wave=1,
+                     mode="delta", key=["k"])
+    st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=2, mode="delta",
+              key=["k"])
     assert _state(spark, st, "t", as_of_wave=0) == [(1, "a")]
     assert _state(spark, st, "t", as_of_wave=1) == [(1, "a1")]
     assert _state(spark, st, "t", snapshot=sid1) == [(1, "a1")]
@@ -59,10 +61,12 @@ def test_compaction_full_commit_resets_base(spark, tmp_path):
     stay readable for time travel until expired."""
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, key=["k"])
+    st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, mode="delta",
+              key=["k"])
     # compaction: materialized full state at wave 2
     st.commit(_df(spark, [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]), "t", wave=2)
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b1"}]), "t", wave=3, key=["k"])
+    st.commit(_df(spark, [{"k": 2, "v": "b1"}]), "t", wave=3, mode="delta",
+              key=["k"])
     assert _state(spark, st, "t") == [(1, "a"), (2, "b1")]
     assert _state(spark, st, "t", as_of_wave=1) == [(1, "a"), (2, "b")]
 
@@ -72,8 +76,10 @@ def test_delta_commit_is_wave_idempotent(spark, tmp_path):
     second copy (crash-resume re-executes the interrupted wave)."""
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, key=["k"])
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, key=["k"])
+    st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, mode="delta",
+              key=["k"])
+    st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1, mode="delta",
+              key=["k"])
     assert len(st.snapshots("t")) == 2
     assert _state(spark, st, "t") == [(1, "a"), (2, "b")]
 
@@ -81,7 +87,8 @@ def test_delta_commit_is_wave_idempotent(spark, tmp_path):
 def test_read_snapshot_raw_is_the_delta_alone(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]), "t", wave=0)
-    st.commit_delta(_df(spark, [{"k": 1, "v": "a1"}]), "t", wave=1, key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "a1"}]), "t", wave=1, mode="delta",
+              key=["k"])
     raw = st.read_snapshot_raw(spark, "t", wave=1)
     assert [(r["k"], r["v"]) for r in raw.collect()] == [(1, "a1")]
 
@@ -91,13 +98,16 @@ def test_expire_keeps_fulls_plus_trailing_deltas(spark, tmp_path):
     the oldest kept full — a retained delta always has its base chain."""
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)            # full
-    st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1)      # delta
+    st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1,
+              mode="delta")                                             # delta
     st.commit(_df(spark, [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]),
               "t", wave=2)                                              # full
-    st.commit_delta(_df(spark, [{"k": 3, "v": "c"}]), "t", wave=3)      # delta
+    st.commit(_df(spark, [{"k": 3, "v": "c"}]), "t", wave=3,
+              mode="delta")                                             # delta
     st.commit(_df(spark, [{"k": i, "v": v} for i, v in
                           [(1, "a"), (2, "b"), (3, "c")]]), "t", wave=4)  # full
-    st.commit_delta(_df(spark, [{"k": 4, "v": "d"}]), "t", wave=5)      # delta
+    st.commit(_df(spark, [{"k": 4, "v": "d"}]), "t", wave=5,
+              mode="delta")                                             # delta
     n = st.expire_snapshots("t", keep=2)
     waves = [s["wave"] for s in st.snapshots("t")]
     assert waves == [2, 3, 4, 5]  # fulls 2,4 + every delta after full 2
@@ -116,7 +126,8 @@ def test_expire_never_strands_a_delta_without_base(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "s"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)
     for w in range(1, 5):
-        st.commit_delta(_df(spark, [{"k": 10 + w, "v": "x"}]), "t", wave=w)
+        st.commit(_df(spark, [{"k": 10 + w, "v": "x"}]), "t", wave=w,
+                  mode="delta")
     assert st.expire_snapshots("t", keep=2) == 0
     assert len(st.snapshots("t")) == 5
 
@@ -150,17 +161,17 @@ def test_delete_where_tombstone_removes_key_and_readd_revives(spark, tmp_path):
     st.commit(_df(spark, [{"k": 1, "v": "a"}, {"k": 2, "v": "b"},
                           {"k": 3, "v": "c"}]), "t", wave=0)
     # one delta mixing a tombstone (k=1), an update (k=2) and an insert (k=4)
-    st.commit_delta(_df(spark, [{"k": 1, "v": "DEL"}, {"k": 2, "v": "b1"},
-                                {"k": 4, "v": "d"}]),
-                    "t", wave=1, key=["k"], delete_where="v = 'DEL'")
+    st.commit(_df(spark, [{"k": 1, "v": "DEL"}, {"k": 2, "v": "b1"},
+                          {"k": 4, "v": "d"}]),
+              "t", wave=1, mode="delta", key=["k"], delete_where="v = 'DEL'")
     assert _state(spark, st, "t") == [(2, "b1"), (3, "c"), (4, "d")]
     # delete a key that exists only in an earlier DELTA, not the base
-    st.commit_delta(_df(spark, [{"k": 4, "v": "DEL"}]),
-                    "t", wave=2, key=["k"], delete_where="v = 'DEL'")
+    st.commit(_df(spark, [{"k": 4, "v": "DEL"}]),
+              "t", wave=2, mode="delta", key=["k"], delete_where="v = 'DEL'")
     assert _state(spark, st, "t") == [(2, "b1"), (3, "c")]
     # re-add a deleted key: the newer upsert wins over the tombstone
-    st.commit_delta(_df(spark, [{"k": 1, "v": "back"}]), "t", wave=3,
-                    key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "back"}]), "t", wave=3, mode="delta",
+              key=["k"])
     assert _state(spark, st, "t") == [(1, "back"), (2, "b1"), (3, "c")]
     assert _state(spark, st, "t", as_of_wave=2) == [(2, "b1"), (3, "c")]
     assert _state(spark, st, "t", as_of_wave=1) == [(2, "b1"), (3, "c"),
@@ -177,8 +188,8 @@ def test_partitioned_full_commit_composes_and_prunes(spark, tmp_path):
     rows = [{"k": i, "v": f"r{i}", "status": "pending" if i % 3 else "done"}
             for i in range(30)]
     st.commit(_df(spark, rows), "t", wave=0, partition_by=["status"])
-    st.commit_delta(_df(spark, [{"k": 1, "v": "upd", "status": "done"}]),
-                    "t", wave=1, key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "upd", "status": "done"}]),
+              "t", wave=1, mode="delta", key=["k"])
     got = {(r["k"], r["v"], r["status"])
            for r in st.read(spark, "t").collect()}
     exp = {(r["k"], "upd" if r["k"] == 1 else r["v"],
@@ -228,14 +239,15 @@ def test_randomized_commit_sequences_match_fold_oracle(spark, tmp_path):
                 rows = [{"k": rng.randint(0, 25), "v": f"a{wave}.{i}"}
                         for i in range(rng.randint(1, 3))]
                 oracle.extend((r["k"], r["v"]) for r in rows)
-                st.commit_delta(_df(spark, rows), "t", wave=wave)
+                st.commit(_df(spark, rows), "t", wave=wave, mode="delta")
             elif kind == "delta_upsert":
                 live = sorted({k for k, _ in oracle}) or [0]
                 ks = set(rng.sample(live, min(len(live), rng.randint(1, 3))))
                 rows = [{"k": k, "v": f"u{wave}.{k}"} for k in sorted(ks)]
                 oracle = ([kv for kv in oracle if kv[0] not in ks]
                           + [(r["k"], r["v"]) for r in rows])
-                st.commit_delta(_df(spark, rows), "t", wave=wave, key=["k"])
+                st.commit(_df(spark, rows), "t", wave=wave, mode="delta",
+                          key=["k"])
             else:
                 # one keyed delta mixing tombstones (v matches the
                 # predicate) with plain upsert rows on other keys; a
@@ -251,8 +263,8 @@ def test_randomized_commit_sequences_match_fold_oracle(spark, tmp_path):
                         + [{"k": k, "v": f"u{wave}.{k}"} for k in sorted(uks)])
                 oracle = ([kv for kv in oracle if kv[0] not in dks | uks]
                           + [(k, f"u{wave}.{k}") for k in sorted(uks)])
-                st.commit_delta(_df(spark, rows), "t", wave=wave, key=["k"],
-                                delete_where="v = 'DEL'")
+                st.commit(_df(spark, rows), "t", wave=wave, mode="delta",
+                          key=["k"], delete_where="v = 'DEL'")
             if rng.random() < 0.3:
                 st.expire_snapshots("t", keep=rng.randint(1, 2))
             got = sorted((r["k"], r["v"])
@@ -271,8 +283,8 @@ def test_keyed_delta_with_duplicate_keys_self_heals(spark, tmp_path):
     st = SnapshotStore(str(tmp_path / "d"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]),
               "t", wave=0)
-    st.commit_delta(_df(spark, [{"k": 1, "v": "x"}, {"k": 1, "v": "y"}]),
-                    "t", wave=1, key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "x"}, {"k": 1, "v": "y"}]),
+              "t", wave=1, mode="delta", key=["k"])
     rows = st.read(spark, "t").collect()
     assert len(rows) == 2
     got = {r["k"]: r["v"] for r in rows}
@@ -288,8 +300,10 @@ def test_mixed_merge_keys_in_one_chain_raise(spark, tmp_path):
 
     st = SnapshotStore(str(tmp_path / "m"))
     st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0)
-    st.commit_delta(_df(spark, [{"k": 1, "v": "b"}]), "t", wave=1, key=["k"])
-    st.commit_delta(_df(spark, [{"k": 2, "v": "c"}]), "t", wave=2, key=["v"])
+    st.commit(_df(spark, [{"k": 1, "v": "b"}]), "t", wave=1, mode="delta",
+              key=["k"])
+    st.commit(_df(spark, [{"k": 2, "v": "c"}]), "t", wave=2, mode="delta",
+              key=["v"])
     with pytest.raises(ValueError, match="MERGE key"):
         st.read(spark, "t")
 
@@ -322,8 +336,8 @@ def test_recommit_overwrites_mid_commit_orphan_dir(spark, tmp_path):
     _df(spark, [{"k": 99, "v": "torn"}]).write.parquet(orphan)
     assert st.latest_wave("t") == 0  # manifest never saw the torn commit
     # the re-run of wave 1 must land on the same id and replace the orphan
-    sid = st.commit_delta(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1,
-                          key=["k"])
+    sid = st.commit(_df(spark, [{"k": 2, "v": "b"}]), "t", wave=1,
+                    mode="delta", key=["k"])
     assert sid == 1
     assert _state(spark, st, "t") == [(1, "a"), (2, "b")]
     raw = st.read_snapshot_raw(spark, "t", 1).collect()
@@ -343,7 +357,7 @@ def test_read_chain_without_full_base_raises(spark, tmp_path):
     semantics — read() must fail loudly (the loop always commits a
     table's first snapshot full; only external assembly can get here)."""
     st = SnapshotStore(str(tmp_path / "s"))
-    st.commit_delta(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0,
-                    key=["k"])
+    st.commit(_df(spark, [{"k": 1, "v": "a"}]), "t", wave=0, mode="delta",
+              key=["k"])
     with pytest.raises(ValueError, match="no full base"):
         st.read(spark, "t")

@@ -204,7 +204,7 @@ def test_stream_recovers_status_from_partitioned_snapshots(spark, tmp_path):
     delta = spark.createDataFrame(
         [("https://h0.org/d", None, "h0.org", 0, 1, 100, "pending",
           0, None, t0, t0)], fs.FRONTIER_STREAM_SCHEMA)
-    st.commit_delta(delta, "frontier", wave=1, key=["url_hash"])
+    st.commit(delta, "frontier", wave=1, mode="delta", key=["url_hash"])
 
     src = fs.stream_discoveries(spark, str(tmp_path / "snaps" / "frontier"))
     q = (src.writeStream.format("parquet")

@@ -2,7 +2,6 @@
 simulator's crawl order, extracted bytes, and URL-seen set on the same seed
 (SURVEY.md §7 Phase 6). Includes failure injection + resume-from-checkpoint."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from s_crawler_spark.corpus import seed_search_url
@@ -122,19 +121,6 @@ def test_resume_parity_at_every_wave_boundary(spark, pages, pages_dict,
         assert_parity(cat.collect(), sim)
         assert frontier_state(st) == ref_frontier, k
         assert policy_state(st) == ref_policy, k
-
-
-def test_fresh_crawl_into_used_store_raises(spark, pages, tmp_path):
-    """resume=False over a store with committed waves must refuse: wave 0
-    would re-commit under the old store's LATER snapshots, and every
-    merge-on-read would compose the stale state over the new wave's."""
-    store = SnapshotStore(str(tmp_path / "dirty"))
-    crawl(spark, pages, seed_search_url(), store,
-          wave_seconds=100, max_waves=2, n_shards=4)
-    assert store.latest_wave("frontier") is not None
-    with pytest.raises(ValueError, match="fresh store root"):
-        crawl(spark, pages, seed_search_url(), store,
-              wave_seconds=100, max_waves=2, n_shards=4, resume=False)
 
 
 def test_crawl_idempotent_rerun(spark, pages, pages_dict, tmp_path):
@@ -277,35 +263,6 @@ def test_adaptive_delay_crawl(spark, pages, pages_dict, tmp_path):
                for r in store.read(spark, "host_policy").collect()}
     # monotone decay for all-success hosts: no host got slower
     assert all(pol_end[h] <= d for h, d in pol_mid.items() if h in pol_end)
-
-
-def test_legacy_store_without_robots_ok_migrates_on_resume(spark, pages,
-                                                           pages_dict,
-                                                           tmp_path):
-    """A store written before the stored robots bit (frontier has no
-    robots_ok column) must keep resuming: the loop decorates the composed
-    frontier once with the current rules, forces the next frontier commit
-    FULL (a delta would union mismatched schemas onto the legacy base),
-    and the finished crawl still matches the reference byte for byte."""
-    from pyspark.sql import functions as F
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    store = SnapshotStore(str(tmp_path / "legacy"))
-    crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
-          max_waves=2, n_shards=4)
-    lw = store.latest_wave("frontier")
-    legacy = store.read(spark, "frontier").drop("robots_ok")
-    # overwrite the latest snapshot with a legacy-shaped FULL (pre-upgrade
-    # stores committed the full frontier without the column)
-    store.commit(legacy, "frontier", lw, partition_by=["status"])
-    assert "robots_ok" not in store.read(spark, "frontier").columns
-    cat = crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
-                max_waves=30, n_shards=4)
-    assert_parity(cat.collect(), sim)
-    migrated = store.read(spark, "frontier")
-    assert "robots_ok" in migrated.columns
-    assert migrated.filter(F.col("robots_ok").isNull()).count() == 0
-    resumed = [s for s in store.snapshots("frontier") if s["wave"] == lw + 1]
-    assert resumed and resumed[0]["mode"] == "full"
 
 
 def test_resume_rescans_discovery_once_per_process(spark, tmp_path):
@@ -632,20 +589,21 @@ def test_resume_with_different_n_shards_rebuilds_layout(spark, pages,
 
 
 def test_auto_shards_grows_layout_and_matches_reference(spark, pages,
-                                                        pages_dict, tmp_path):
+                                                        pages_dict, tmp_path,
+                                                        monkeypatch):
     """n_shards='auto' sizes the filter layout from the live seen count:
     with a tiny per-shard target the layout must GROW across the crawl
     (power-of-two rebuilds via the layout-change path), end at the size
     auto_shard_count prescribes for the final seen set, and the catalog
     must still match the reference exactly (probes use the stored layout,
     so growth can never mis-route a candidate past the backstop)."""
-    from s_crawler_spark.operators.seen import auto_shard_count
+    from s_crawler_spark.operators import seen as sn
 
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
+    monkeypatch.setattr(sn, "SHARD_TARGET_ITEMS", 64)
     store = SnapshotStore(str(tmp_path / "auto"))
     cat = crawl(spark, pages, seed_search_url(), store,
-                wave_seconds=100, max_waves=30, n_shards="auto",
-                shard_target_items=64)
+                wave_seconds=100, max_waves=30, n_shards="auto")
     assert_parity(cat.collect(), sim)
     metas = [s["meta"].get("n_shards")
              for s in store.snapshots("seen_shards")]
@@ -653,7 +611,7 @@ def test_auto_shards_grows_layout_and_matches_reference(spark, pages,
     assert all(a <= b for a, b in zip(metas, metas[1:]))
     assert metas[0] < metas[-1]
     n_seen = store.read(spark, "seen").count()
-    assert metas[-1] == auto_shard_count(n_seen, 64)
+    assert metas[-1] == sn.auto_shard_count(n_seen, 64)
     # the final committed layout spans its full id range (probe inference)
     shards = store.read(spark, "seen_shards")
     assert sorted(r["shard_id"] for r in
@@ -662,18 +620,21 @@ def test_auto_shards_grows_layout_and_matches_reference(spark, pages,
 
 
 def test_auto_shards_resume_keeps_stored_layout_when_no_growth(
-        spark, pages, pages_dict, tmp_path):
+        spark, pages, pages_dict, tmp_path, monkeypatch):
     """Resuming an auto-shards crawl (or switching a fixed-layout store to
     'auto') must not churn the layout downward: grow-only means a stored
     modulus larger than the auto-derived one is kept, and no-growth waves
     take the incremental touched-shard delta path, not a rebuild."""
+    from s_crawler_spark.operators import seen as sn
+
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
     store = SnapshotStore(str(tmp_path / "fixed_then_auto"))
     crawl(spark, pages, seed_search_url(), store,
           wave_seconds=100, max_waves=2, n_shards=32)
+    # auto would say 1 shard — the stored layout wins
+    monkeypatch.setattr(sn, "SHARD_TARGET_ITEMS", 10 ** 6)
     cat = crawl(spark, pages, seed_search_url(), store,
-                wave_seconds=100, max_waves=30, n_shards="auto",
-                shard_target_items=10 ** 6)  # auto would say 1 — stored wins
+                wave_seconds=100, max_waves=30, n_shards="auto")
     assert_parity(cat.collect(), sim)
     snaps = store.snapshots("seen_shards")
     assert all(s["meta"].get("n_shards") == 32 for s in snaps)
@@ -682,37 +643,22 @@ def test_auto_shards_resume_keeps_stored_layout_when_no_growth(
     assert any(s.get("mode") == "delta" for s in snaps[1:])
 
 
-def test_cuckoo_filter_kind_crawl_exact_and_incremental(spark, pages,
-                                                        pages_dict, tmp_path):
-    """crawl(filter_kind='cuckoo') must be reference-exact end-to-end (the
-    probe is advisory either way — the exact backstop decides), commit
-    cuckoo-kind blobs, and still take the touched-shard incremental path
-    on non-compaction waves (update_shards honors the stored kind)."""
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    store = SnapshotStore(str(tmp_path / "ck"))
-    cat = crawl(spark, pages, seed_search_url(), store,
-                wave_seconds=100, max_waves=30, n_shards=4,
-                filter_kind="cuckoo")
-    assert_parity(cat.collect(), sim)
-    shards = store.read(spark, "seen_shards").collect()
-    assert shards and all(r["kind"] == "cuckoo" for r in shards)
-    assert any(s.get("mode") == "delta"
-               for s in store.snapshots("seen_shards"))
-
-
 def test_auto_compaction_chain_cap_and_parity(spark, pages, pages_dict,
-                                              tmp_path):
+                                              tmp_path, monkeypatch):
     """compact_every='auto' with the ratio trigger disabled (huge
-    compact_frac_bp) must compact exactly on the chain cap: the frontier
-    snapshot sequence never carries more than compact_chain_cap
+    COMPACT_FRAC_BP) must compact exactly on the chain cap: the frontier
+    snapshot sequence never carries more than COMPACT_CHAIN_CAP
     consecutive deltas, every delta's manifest records its row count
     (the resume seed), and the catalog still matches the reference."""
+    from s_crawler_spark.plans import wave as wv
+
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
+    monkeypatch.setattr(wv, "COMPACT_FRAC_BP", 10 ** 9)
+    monkeypatch.setattr(wv, "COMPACT_CHAIN_CAP", 2)
     store = SnapshotStore(str(tmp_path / "autocompact"))
     cat = crawl(spark, pages, seed_search_url(), store,
                 wave_seconds=100, max_waves=30, n_shards=4,
-                compact_every="auto", compact_frac_bp=10 ** 9,
-                compact_chain_cap=2)
+                compact_every="auto")
     assert_parity(cat.collect(), sim)
     snaps = store.snapshots("frontier")
     modes = [s.get("mode", "full") for s in snaps]
@@ -726,14 +672,17 @@ def test_auto_compaction_chain_cap_and_parity(spark, pages, pages_dict,
 
 
 def test_auto_compaction_resume_matches_uninterrupted_schedule(
-        spark, pages, pages_dict, tmp_path):
+        spark, pages, pages_dict, tmp_path, monkeypatch):
     """The auto-compaction schedule is a pure function of committed state:
     a crawl stopped at a wave boundary and resumed must compact on exactly
     the waves the uninterrupted run compacts on (chain statistics re-seed
     from the manifests' n_delta), and both end reference-exact."""
+    from s_crawler_spark.plans import wave as wv
+
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    kw = dict(wave_seconds=100, n_shards=4, compact_every="auto",
-              compact_frac_bp=10 ** 9, compact_chain_cap=3)
+    monkeypatch.setattr(wv, "COMPACT_FRAC_BP", 10 ** 9)
+    monkeypatch.setattr(wv, "COMPACT_CHAIN_CAP", 3)
+    kw = dict(wave_seconds=100, n_shards=4, compact_every="auto")
     st_a = SnapshotStore(str(tmp_path / "uninterrupted"))
     cat_a = crawl(spark, pages, seed_search_url(), st_a, max_waves=30, **kw)
     st_b = SnapshotStore(str(tmp_path / "resumed"))

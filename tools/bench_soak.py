@@ -17,9 +17,10 @@ commits land):
 Usage: python tools/bench_soak.py [sf_dir] [wave_seconds] [max_waves]
        (defaults: /root/testdata/sf0.01, 60, 40)
        SOAK_COMPACT=auto runs the LSM size-ratio policy instead of the
-       fixed cadence (SOAK_FRAC_BP / SOAK_CHAIN_CAP tune it) — the table
-       then evidences the amortization claim: compactions become rarer as
-       the frontier grows while per-wave compose cost stays bounded.
+       fixed cadence (thresholds: plans/wave.py COMPACT_FRAC_BP and
+       COMPACT_CHAIN_CAP) — the table then evidences the amortization
+       claim: compactions become rarer as the frontier grows while
+       per-wave compose cost stays bounded.
 
 Prints a per-wave table and ONE JSON summary line.
 """
@@ -41,8 +42,6 @@ MAX_WAVES = int(sys.argv[3]) if len(sys.argv) > 3 else 40
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 COMPACT_EVERY: int | str = (
     "auto" if os.environ.get("SOAK_COMPACT") == "auto" else 8)
-FRAC_BP = int(os.environ.get("SOAK_FRAC_BP", "2500"))
-CHAIN_CAP = int(os.environ.get("SOAK_CHAIN_CAP", "64"))
 EXPIRE_KEEP = 2
 
 
@@ -94,7 +93,6 @@ def main() -> None:
         cat = crawl(spark, pages, seed_search_url(), store,
                     wave_seconds=WAVE_SECONDS, max_waves=MAX_WAVES,
                     n_shards=8, compact_every=COMPACT_EVERY,
-                    compact_frac_bp=FRAC_BP, compact_chain_cap=CHAIN_CAP,
                     expire_keep=EXPIRE_KEEP,
                     adaptive_delay=True, trap_guard=True)
         n_articles = cat.count()

@@ -1,26 +1,18 @@
-"""Per-wave fixed-cost profile + pooled-vs-serial commit A/B.
+"""Per-wave fixed-cost profile of the crawl loop's pooled commits.
 
 VERDICT r04 "What's wrong" #2: the multiwave loop carries ~6-8 s/wave of
 orchestration at small waves — ~9 separate per-table commit jobs plus the
-compose-read barriers — unmeasured per phase. This tool measures both
-halves of the fix:
+compose-read barriers — unmeasured per phase. One composed crawl keeps its
+store; the phase_log the loop already commits (one row per per-table
+commit job, ms of that job's write action) is pivoted into a wave x table
+breakdown, plus the wave's commit-critical-path wall (time from first
+commit start to the durable pointer flip, sampled by an instrumented
+store).
 
-1. PHASE PROFILE: one composed crawl keeps its store; the phase_log the
-   loop already commits (one row per per-table commit job, ms of that
-   job's write action) is pivoted into a wave x table breakdown, plus the
-   wave's commit-critical-path wall (time from first commit start to the
-   durable pointer flip, sampled by an instrumented store).
+Usage: taskset -c 0-7 python tools/bench_wave_phases.py [sf_dir]
+       (default sf_dir: the sf0.01 fixture; SPARK_GRAFT_CPUS sets local[N])
 
-2. POOLED vs SERIAL: the same composed workload run interleaved
-   (pool,serial,pool,serial,...) under SPARK_GRAFT_COMMIT_POOL=8 vs =1,
-   taskset-pinned by the caller — this box's ±30-70% co-tenant noise makes
-   only interleaved comparisons valid (CLAUDE.md). Reports per-trial walls
-   and medians.
-
-Usage: taskset -c 0-7 python tools/bench_wave_phases.py [sf_dir] [trials]
-       (defaults: /root/testdata/sf0.01, 3; SPARK_GRAFT_CPUS sets local[N])
-
-Prints the phase table, the A/B table, and ONE JSON summary line.
+Prints the phase table and ONE JSON summary line.
 """
 
 from __future__ import annotations
@@ -28,7 +20,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import statistics
 import sys
 import tempfile
 import time
@@ -36,7 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-TRIALS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 WAVE_KW = dict(wave_seconds=1000, max_waves=12, n_shards=8,
                adaptive_delay=True, trap_guard=True, expire_keep=2,
@@ -55,7 +45,7 @@ def main() -> None:
     pages = synthesize_pages(spark, SF_DIR).localCheckpoint()
     seed = seed_search_url()
 
-    # ---- 1. phase profile (one pooled run, store kept until read) -------
+    # ---- phase profile (one pooled run, store kept until read) ---------
     commit_walls: dict[int, float] = {}    # wave -> first-commit..pointer s
 
     class ProfiledStore(SnapshotStore):
@@ -90,8 +80,8 @@ def main() -> None:
     waves = sorted({w for w, _, _ in plog})
     tables = sorted({p for _, p, _ in plog})
     cell = {(w, p): ms for w, p, ms in plog}
-    print(f"== per-wave commit-phase ms (pool={os.environ.get('SPARK_GRAFT_COMMIT_POOL', '8')}, "
-          f"{len(waves)} waves, total loop wall {profile_wall:.1f}s) ==")
+    print(f"== per-wave commit-phase ms ({len(waves)} waves, "
+          f"total loop wall {profile_wall:.1f}s) ==")
     print("NOTE: pooled phases overlap — rows sum to MORE than the wave's")
     print("commit critical path (the `commit_wall_s` column).")
     hdr = "wave  " + "  ".join(f"{t[:12]:>12s}" for t in tables) + "  commit_wall_s"
@@ -100,40 +90,11 @@ def main() -> None:
         row = "  ".join(f"{cell.get((w, t), 0):12d}" for t in tables)
         print(f"{w:4d}  {row}  {commit_walls.get(w, 0):13.2f}")
 
-    # ---- 2. interleaved pooled-vs-serial A/B ----------------------------
-    def timed_loop() -> float:
-        r = tempfile.mkdtemp(prefix="bench_ab_")
-        try:
-            t0 = time.perf_counter()
-            crawl(spark, pages, seed, SnapshotStore(r), **WAVE_KW)
-            return time.perf_counter() - t0
-        finally:
-            shutil.rmtree(r, ignore_errors=True)
-
-    timed_loop()  # warmup (JIT/codegen; identical for all arms)
-    widths = ["1", "2", "4", "8"]
-    ab: dict[str, list[float]] = {w: [] for w in widths}
-    for _ in range(TRIALS):
-        for w in widths:
-            os.environ["SPARK_GRAFT_COMMIT_POOL"] = w
-            ab[w].append(timed_loop())
-    os.environ.pop("SPARK_GRAFT_COMMIT_POOL", None)
-
-    print(f"\n== commit pool width sweep, interleaved, "
-          f"{TRIALS} trials each, local[{CPUS}] ==")
-    for w in widths:
-        runs = " ".join(f"{x:.1f}" for x in ab[w])
-        print(f"pool={w}  median {statistics.median(ab[w]):6.1f}s   runs: {runs}")
-    med_s, med_p = statistics.median(ab["1"]), statistics.median(ab["8"])
-    print(f"speedup (serial/pool8): {med_s / med_p:.2f}x")
-
     print(json.dumps({
         "metric": "wave_phase_profile",
         "sf_dir": SF_DIR, "cpus": CPUS, "waves": len(waves),
         "commit_wall_s": {str(w): round(commit_walls.get(w, 0), 2) for w in waves},
         "phase_ms": {str(w): {t: cell.get((w, t), 0) for t in tables} for w in waves},
-        "ab_s": {w: [round(x, 2) for x in ab[w]] for w in widths},
-        "ab_speedup_serial_over_pool8": round(med_s / med_p, 3),
     }))
 
 

@@ -503,10 +503,10 @@ def main() -> int:
     fr_aud = pages.select(F.xxhash64("url").alias("url_hash"), "url",
                           F.lit("pending").alias("status"))
     st.commit(fr_aud, "frontier", 0)
-    st.commit_delta(fr_aud.limit(20).withColumn("status", F.lit("done")),
-                    "frontier", 1, key=["url_hash"])
-    st.commit_delta(fr_aud.limit(5).withColumn("status", F.lit("failed")),
-                    "frontier", 2, key=["url_hash"])
+    st.commit(fr_aud.limit(20).withColumn("status", F.lit("done")),
+              "frontier", 1, mode="delta", key=["url_hash"])
+    st.commit(fr_aud.limit(5).withColumn("status", F.lit("failed")),
+              "frontier", 2, mode="delta", key=["url_hash"])
     p18 = plan_of(st.read(spark, "frontier"))
     win18 = [re.search(r"Input \[\d+\]: \[([^\]]*)\]", b).group(1)
              for b in re.split(r"\n\n", p18)
@@ -534,8 +534,8 @@ def main() -> int:
         "next_eligible_bucket", fr_ops.eligible_bucket(F.col("next_eligible")))
     st.commit(fr_audp, "frontier_p", 0,
               partition_by=["status", "next_eligible_bucket"])
-    st.commit_delta(fr_audp.limit(20).withColumn("status", F.lit("done")),
-                    "frontier_p", 1, key=["url_hash"])
+    st.commit(fr_audp.limit(20).withColumn("status", F.lit("done")),
+              "frontier_p", 1, mode="delta", key=["url_hash"])
     p18b = plan_of(fr_ops.eligible_pending(st.read(spark, "frontier_p"),
                                            "2024-06-01 01:00:00"))
     all_ok &= audit("partitioned frontier base (admission pruning)", p18b, [
@@ -732,6 +732,21 @@ def main() -> int:
     all_ok &= audit("adapt_host_policy delta (outcome-host prune)", p23, [
         ("policy dimension pruned by a broadcast LEFT-SEMI join",
          bool(re.search(r"BroadcastHashJoin .*LeftSemi", p23))),
+    ])
+
+    # ---- duplicated_spans: the occurrence table is computed once ---------
+    # (doc_id, pos, gram hash) rows feed both the corpus-wide gram count and
+    # the mark join; the operator checkpoints them, so the posexplode → md5
+    # scan must not appear in the plan, and both branches must read the
+    # SAME checkpointed RDD
+    p24 = plan_of(td.duplicated_spans(docs))
+    occ_rdds = re.findall(r"Arguments: .*?(\w+RDD\[\d+\]) at localCheckpoint",
+                          p24)
+    all_ok &= audit("duplicated_spans (occurrence table scanned once)", p24, [
+        ("no Generate/posexplode node: the gram scan runs inside the "
+         "checkpoint", "Generate" not in p24 and "posexplode" not in p24),
+        ("gram count and mark join read one checkpointed RDD",
+         len(occ_rdds) >= 2 and len(set(occ_rdds)) == 1),
     ])
 
     print("\n" + ("ALL CHECKS PASS" if all_ok else "SOME CHECKS FAILED"))
