@@ -134,6 +134,7 @@ def bloom_probe(bits: bytes, keys: np.ndarray, k: int = DEFAULT_K) -> np.ndarray
 
 _CK_SLOTS = 4
 _CK_MAX_KICKS = 500
+_CK_MAX_GROWTH = 8  # n_buckets doublings before cuckoo_build gives up
 
 
 def _ck_fingerprint(keys: np.ndarray) -> np.ndarray:
@@ -238,11 +239,19 @@ def _cuckoo_insert_all(table: np.ndarray, keys: np.ndarray) -> bool:
 
 
 def cuckoo_build(keys: np.ndarray, n_buckets: int) -> bytes:
+    """A table of at least ``n_buckets`` buckets holding each distinct key
+    once (copies of one key share a bucket pair no size can hold). A kick
+    chain failure — skewed keys crowding one bucket pair — doubles the
+    table and retries; keys that fit first time keep their layout."""
+    keys = keys[np.sort(np.unique(keys, return_index=True)[1])]
     n_buckets = _pow2_at_least(n_buckets)
-    table = np.zeros(n_buckets * _CK_SLOTS, dtype=np.uint16)
-    if not _cuckoo_insert_all(table, keys):
-        raise RuntimeError("cuckoo filter over capacity; grow n_buckets")
-    return table.tobytes()
+    for _ in range(_CK_MAX_GROWTH + 1):
+        table = np.zeros(n_buckets * _CK_SLOTS, dtype=np.uint16)
+        if _cuckoo_insert_all(table, keys):
+            return table.tobytes()
+        n_buckets *= 2
+    raise RuntimeError("cuckoo filter over capacity after "
+                       f"{_CK_MAX_GROWTH} doublings")
 
 
 def cuckoo_add(bits: bytes, keys: np.ndarray) -> bytes | None:

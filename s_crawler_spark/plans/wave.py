@@ -26,9 +26,9 @@ Plan shape / scale notes (verified via .explain — see BENCH notes):
 
 from __future__ import annotations
 
-import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
+from time import perf_counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,11 @@ LOGICAL_T0 = datetime(2024, 6, 1)
 # or when the chain reaches COMPACT_CHAIN_CAP snapshots
 COMPACT_FRAC_BP = 2500
 COMPACT_CHAIN_CAP = 64
+
+# the crawl's one ledger, long form: per wave the frontier status counts
+# (phase "status"), the three hops' per-partition fetch/parse lineage
+# (phase = hop, part = partition id) and each commit's ms (phase "commit")
+WAVE_LOG_SCHEMA = "phase string, part int, metric string, value long, wave int"
 
 
 def _content_fp(df: DataFrame, *cols) -> tuple:
@@ -115,8 +120,7 @@ def collect_candidates(pages: DataFrame, seed_url: str,
 
 
 def fetch_parse(pages: DataFrame, batch: DataFrame,
-                return_lineage: bool = False,
-                broadcast_keys: bool = True):
+                return_lineage: bool = False):
     """The two-hop fetch + extraction pipeline for one wave's batch.
 
     batch: candidate rows with (url, seq, title, doi, journal,
@@ -144,16 +148,7 @@ def fetch_parse(pages: DataFrame, batch: DataFrame,
     Each intermediate is lazily localCheckpoint'ed: the next hop's key set
     and the final join both consume it, and the checkpoint stops the heavy
     extraction from executing once per consumer.
-
-    ``broadcast_keys=False`` is the beyond-broadcast wave-size switch: the
-    six joins drop their broadcast hints and Catalyst/AQE picks the
-    strategy — against a url-bucketed ``pages`` table the hop semi joins
-    become storage-partitioned with no exchange on the pages side
-    (tools/explain_audit.py proves the bucketed plan shape), and the
-    extracted tables hash-join back on their keys. Identical results
-    either way (pytest-pinned).
     """
-    bc = F.broadcast if broadcast_keys else (lambda df: df)
     detail = pages.select(F.col("url"), F.col("html"))
     viewer = pages.select(F.col("url").alias("pdf_page_url"),
                           F.col("html").alias("viewer_html"))
@@ -170,16 +165,16 @@ def fetch_parse(pages: DataFrame, batch: DataFrame,
     # batch→step1→step2 ladder pays (a latency tax at small waves; at scale
     # it also halves the number of barrier jobs per wave).
     d1 = lg.detail_extract_timed(
-        detail.join(bc(batch.select("url").distinct()),
+        detail.join(F.broadcast(batch.select("url").distinct()),
                     on="url", how="left_semi")
     ).localCheckpoint(eager=False)  # consumers: v1 keys, final join(, lineage)
     v1 = lg.viewer_extract_timed(
-        viewer.join(bc(
+        viewer.join(F.broadcast(
             d1.filter(F.col("pdf_page_url").isNotNull())
             .select("pdf_page_url").distinct()), on="pdf_page_url", how="left_semi")
     ).localCheckpoint(eager=False)  # consumers: p1 keys, final join(, lineage)
     p1 = (
-        payload.join(bc(
+        payload.join(F.broadcast(
             v1.filter(F.col("download_link").isNotNull())
             .select("download_link").distinct()), on="download_link", how="left_semi")
         .select("download_link",
@@ -191,14 +186,14 @@ def fetch_parse(pages: DataFrame, batch: DataFrame,
         p1 = p1.localCheckpoint(eager=False)
     result = (
         batch
-        .join(bc(
+        .join(F.broadcast(
             d1.select("url", "abstract", "pdf_page_url", "keywords")
             .withColumn("fetched_detail", F.lit(True))), on="url", how="left")
         .withColumn("fetched_detail",
                     F.coalesce(F.col("fetched_detail"), F.lit(False)))
-        .join(bc(v1.select("pdf_page_url", "download_link")),
+        .join(F.broadcast(v1.select("pdf_page_url", "download_link")),
               on="pdf_page_url", how="left")
-        .join(bc(p1), on="download_link", how="left")
+        .join(F.broadcast(p1), on="download_link", how="left")
         .withColumn("pdf_valid", F.coalesce(F.col("pdf_valid"), F.lit(False)))
         .withColumn("content_md5", F.col("payload_md5"))
         .drop("payload_md5")
@@ -282,9 +277,9 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
           compact_every: int | str = 8,
           priority_df: DataFrame | None = None) -> DataFrame:
     """Run (or resume) a full crawl to completion. Every wave commits
-    frontier / seen / seen_shards / articles / fetch_log snapshots; killing
-    the driver between waves and calling crawl() again continues from the
-    last committed wave (pytest:
+    frontier / seen / seen_shards / articles snapshots and appends its rows
+    to the ``wave_log`` ledger; killing the driver between waves and
+    calling crawl() again continues from the last committed wave (pytest:
     tests/test_wave_parity.py::test_resume_from_checkpoint).
 
     State commits are O(wave), not O(total): each wave writes only its
@@ -305,7 +300,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     The per-wave *reads* are O(wave)-shaped too: candidate re-hydration
     prunes the O(total) candidates table with a broadcast semi-join on the
     wave's batch keys before any shuffle (candidates are scanned, never
-    hash-partitioned), and the fetch_log status metrics + loop-termination
+    hash-partitioned), and the wave_log status counts + loop-termination
     counts are maintained incrementally from the wave delta (one seed scan
     per process, then pure O(wave) arithmetic). The only remaining
     full-table operation per wave is the eligible-pending admission scan —
@@ -390,7 +385,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     trap_base_ok = False
     # per-status frontier row counts, maintained incrementally (O(wave)
     # arithmetic per wave, seeded by ONE scan on the first wave of this
-    # process — see the fetch_log commit below). Keyed by status string.
+    # process — see the status-count update below). Keyed by status.
     status_counts: dict[str, int] | None = None
     # a wave's ~10 per-table commits are individually atomic but not
     # jointly: a crash between two of them leaves a TORN wave (e.g.
@@ -753,7 +748,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         # makes the update exact: a retried row nets 0, a transition moves
         # 1, an enqueue adds 1. Seeded ONCE per process from the frontier
         # (and re-seeded on resume from the actual state, so a crash
-        # between the frontier and fetch_log commits can never leave
+        # between the frontier and wave_log commits can never leave
         # drift). Replaces a full frontier groupBy scan per wave — the same
         # O(total)→O(wave) move as the delta commits. The ≤4-row collect
         # is a bounded dimension, and it does double duty: it tells exactly
@@ -798,9 +793,6 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         n_outcomes = n_delta - sum(
             r["n_virgin"] for r in delta_agg
             if r["status"] == fr.STATUS_PENDING)
-        metrics = spark.createDataFrame(
-            [(s, n, wave) for s, n in sorted(status_counts.items()) if n != 0],
-            "status string, count long, wave int")
 
         # shard layout this wave's seen_shards commit targets. "auto": size
         # from the live seen count (terminal frontier rows — the exact row
@@ -841,12 +833,12 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         # session natively, so the wave's ~9 commit barriers overlap
         # instead of serializing (the dominant small-wave fixed cost).
         # Durability is unchanged: the wave pointer flips only after EVERY
-        # task (and phase_log) lands, so a crash anywhere inside the pool
-        # rolls the whole wave back. Each commit is a real materialization
-        # boundary, so timing it yields the per-wave phase ledger the
-        # reference keeps (science_crawler_main.py:268-281) — under the
-        # pool the per-phase walls overlap, so they sum to more than the
-        # wave's commit wall.
+        # task (and the wave_log ledger) lands, so a crash anywhere inside
+        # the pool rolls the whole wave back. Each commit is a real
+        # materialization boundary, so timing it yields the per-wave phase
+        # ledger the reference keeps (science_crawler_main.py:268-281) —
+        # under the pool the per-phase walls overlap, so they sum to more
+        # than the wave's commit wall.
         tasks: list[tuple[str, DataFrame, dict]] = []
 
         def commit_task(df, name, **kw):
@@ -914,10 +906,6 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
                             "seen_shards", mode="delta", key=["shard_id"],
                             meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
 
-        commit_task(metrics, "fetch_log")
-        # A3 / north rule: per-partition lineage + fetch/parse metrics are
-        # wave state too — committed so a resumed run keeps the full ledger
-        commit_task(lineage.withColumn("wave", F.lit(wave)), "lineage")
         if adaptive_delay:
             # AIMD politeness update from this wave's per-host outcomes;
             # committed as wave state so resume keeps the learned delays.
@@ -973,15 +961,25 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         # propagates before the pointer flip, so the wave rolls back whole.
         def _run_commit(task):
             name, df, kw = task
-            t0 = time.perf_counter()
+            t0 = perf_counter()
             store.commit(df, name, wave, **kw)
-            return (wave, name, int((time.perf_counter() - t0) * 1000))
+            return "commit", None, name, int((perf_counter() - t0) * 1000), wave
 
-        with ThreadPoolExecutor(max_workers=min(8, len(tasks))) as pool:
-            phase_ms = list(pool.map(_run_commit, tasks))
-        store.commit(
-            spark.createDataFrame(phase_ms, "wave int, phase string, ms long"),
-            "phase_log", wave)
+        # the wave's ledger rows, held on the driver. The lineage (A3)
+        # aggregate runs in the pool beside the commit jobs, off the
+        # critical path; the payload hop's NULL parse_ms drops out
+        ledger = [("status", None, s, n, wave)
+                  for s, n in sorted(status_counts.items()) if n]
+        with ThreadPoolExecutor(max_workers=min(8, len(tasks) + 1)) as pool:
+            lineage_rows = pool.submit(lineage.unpivot(
+                lineage.columns[:2], lineage.columns[2:], "metric", "value")
+                .dropna().collect)
+            ledger += pool.map(_run_commit, tasks)
+        ledger += [(*r, wave) for r in lineage_rows.result()]
+        # the first ledger snapshot is full, later ones unkeyed deltas:
+        # they append, so one read returns the whole crawl
+        store.commit(spark.createDataFrame(ledger, WAVE_LOG_SCHEMA), "wave_log",
+                     wave, mode="delta" if store.snapshots("wave_log") else "full")
         # the wave's multi-table transaction boundary: every snapshot above
         # becomes durable in ONE atomic pointer flip. Before this line a
         # crash rolls the whole wave back (resume re-runs it); after it the
@@ -1031,8 +1029,8 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             # bound snapshot storage: per state table the store keeps the
             # newest `keep` FULL snapshots + the deltas after the oldest
             # kept full (≤ compact_every−1 of them, each O(wave)). Only the
-            # state tables expire — fetch_log / lineage / phase_log are
-            # per-wave ledgers whose history IS the data, never dropped.
+            # state tables expire — wave_log is the per-wave ledger whose
+            # history IS the data, never dropped.
             for t in ("frontier", "articles", "seen", "candidates",
                       "seen_shards", "host_policy", "trap_state"):
                 store.expire_snapshots(t, keep=expire_keep)
@@ -1043,7 +1041,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         if n_delta == 0:
             # nothing changed this wave (no discoveries, no admissions —
             # e.g. every eligible host is trap-contained; n_delta comes
-            # free from the metrics aggregate). If no pending row
+            # free from the status-count aggregate). If no pending row
             # is waiting on a future next_eligible either, the state is at a
             # fixpoint: later waves would replay this one forever. Stop
             # instead of burning max_waves empty barriers (rows stay

@@ -1,10 +1,11 @@
 """Snapshot-committed table store — the engine's state layer.
 
-The north rule puts frontier / seen / host_policy / articles / fetch_log in
-**Iceberg tables** so any wave is resumable from a snapshot. This sandbox has
-no Iceberg runtime jar (offline), so this module provides the same contract
-over parquet + an atomic JSON manifest, with a 1:1 mapping to the Iceberg
-calls a cluster deployment would use:
+The north rule puts frontier / seen / host_policy / articles and the
+per-wave ledger wave_log in **Iceberg tables** so any wave is resumable
+from a snapshot. This sandbox has no Iceberg runtime jar (offline), so
+this module provides the same contract over parquet + an atomic JSON
+manifest, with a 1:1 mapping to the Iceberg calls a cluster deployment
+would use:
 
     SnapshotStore.commit(df, table, wave)   ⇔  df.writeTo(tbl).overwritePartitions()
     SnapshotStore.commit(df, table, wave,

@@ -77,6 +77,16 @@ def policy_state(spark, store):
                   for r in store.read(spark, "host_policy").collect())
 
 
+def ledger_state(spark, store):
+    """wave_log's status counts and per-(wave, hop, metric) lineage count
+    totals: a torn wave's ledger rows left beside its re-run's would
+    double a total. parse_ms and commit ms are wall-clock, so left out."""
+    log = store.read(spark, "wave_log").filter(
+        (F.col("phase") != "commit") & (F.col("metric") != "parse_ms"))
+    return sorted(tuple(r) for r in log.groupBy("wave", "phase", "metric")
+                  .agg(F.sum("value")).collect())
+
+
 def test_resume_after_crash_between_every_adjacent_commit_pair(
         spark, pages, pages_dict, tmp_path):
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
@@ -87,6 +97,7 @@ def test_resume_after_crash_between_every_adjacent_commit_pair(
     assert n_waves >= 3  # full + delta + compaction waves all exercised
     ref_frontier = frontier_state(spark, rec)
     ref_policy = policy_state(spark, rec)
+    ref_ledger = ledger_state(spark, rec)
 
     # every copy of the wave-1 (delta) chain, plus the first / middle / last
     # windows of the full (0) and compaction (2) waves — the recovery path
@@ -110,6 +121,7 @@ def test_resume_after_crash_between_every_adjacent_commit_pair(
         assert_parity(cat.collect(), sim, ctx=(table, wave))
         assert frontier_state(spark, st) == ref_frontier, (table, wave)
         assert policy_state(spark, st) == ref_policy, (table, wave)
+        assert ledger_state(spark, st) == ref_ledger, (table, wave)
         assert st.committed_wave() == n_waves - 1, (table, wave)
         shutil.rmtree(path)  # bound tmp usage across ~16 legs
 
@@ -134,6 +146,7 @@ def test_resume_after_crash_with_expiry_pruned_history(
     assert n_waves >= 3
     ref_frontier = frontier_state(spark, rec)
     ref_policy = policy_state(spark, rec)
+    ref_ledger = ledger_state(spark, rec)
 
     per_wave = {}
     for path, table, wave in rec.log:
@@ -151,6 +164,7 @@ def test_resume_after_crash_with_expiry_pruned_history(
         assert_parity(cat.collect(), sim, ctx=(table, wave))
         assert frontier_state(spark, st) == ref_frontier, (table, wave)
         assert policy_state(spark, st) == ref_policy, (table, wave)
+        assert ledger_state(spark, st) == ref_ledger, (table, wave)
         shutil.rmtree(path)
 
 

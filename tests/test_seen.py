@@ -101,6 +101,34 @@ def test_cuckoo_add_and_overflow():
     assert sn.cuckoo_add(bits, flood) is None
 
 
+# 17 keys of a seeded default_rng(0) draw whose primary bucket is 0 and
+# alternate bucket 5 at 16 buckets: 8 slots for 17 fingerprints
+CROWDED_KEYS = [
+    6323008769749170326, 8553975929585765842, 6160192467058359583,
+    7347699561602801667, 7857168467771599756, 4686065105289048260,
+    7721773393833882967, 6068816415767455152, 119974610870457359,
+    5448381740009542588, 2109020788276450746, 868603798304055390,
+    3677967818884012975, 4362164219054614350, 4022584326025605917,
+    1382934901332557239, 5412600989045026]
+
+
+def test_cuckoo_build_grows_past_a_crowded_bucket_pair():
+    keys = np.array(CROWDED_KEYS, dtype=np.uint64)
+    i1 = sn._mix64(keys) % np.uint64(16)
+    assert (i1 == 0).all()
+    assert (sn._ck_index2(i1, sn._ck_fingerprint(keys), 16) == 5).all()
+    blob = sn._make_blob(keys, "cuckoo", 10, 2.0)  # sized at 16 buckets
+    assert len(blob) > 16 * sn._CK_SLOTS * 2
+    assert sn.cuckoo_probe(blob, keys).all()
+    # a repeated key takes one slot: 20 copies fit the smallest table
+    one = np.repeat(keys[:1], 20)
+    blob = sn.cuckoo_build(one, 16)
+    assert len(blob) == 16 * sn._CK_SLOTS * 2
+    assert sn.cuckoo_probe(blob, keys[:1]).all()
+    assert not sn.cuckoo_probe(sn.cuckoo_delete(blob, keys[:1]),
+                               keys[:1]).any()
+
+
 def _shards_by_id(df):
     return {r["shard_id"]: r for r in df.collect()}
 
@@ -280,5 +308,7 @@ def test_filter_indices_uncorrelated_with_shard_routing():
     n_buckets = max(16, int(len(keys) / (0.84 * sn._CK_SLOTS)) + 1)
     i1 = sn._mix64(keys) % np.uint64(sn._pow2_at_least(n_buckets))
     assert len(np.unique(i1 % np.uint64(n_shards))) == n_shards
-    blob = sn.cuckoo_build(keys, n_buckets)  # raises on kick exhaustion
+    blob = sn.cuckoo_build(keys, n_buckets)
+    # built at the design size: a kick-chain failure would have grown it
+    assert len(blob) == sn._pow2_at_least(n_buckets) * sn._CK_SLOTS * 2
     assert sn.cuckoo_probe(blob, keys).all()  # no false negatives

@@ -263,7 +263,7 @@ def test_trap_guard_fixpoint_break(spark, tmp_path):
     crawl(spark, pages, cp.seed_search_url(), store,
           wave_seconds=3600, max_waves=8, n_shards=2, trap_guard=True)
 
-    waves = sorted(r["wave"] for r in store.read(spark, "phase_log")
+    waves = sorted(r["wave"] for r in store.read(spark, "wave_log")
                    .select("wave").distinct().collect())
     # wave 0: seed admitted+fetched; wave 1: cards enqueued (delta!) but
     # withheld; wave 2: no delta, nothing future-eligible -> break

@@ -2,6 +2,7 @@
 simulator's crawl order, extracted bytes, and URL-seen set on the same seed
 (SURVEY.md §7 Phase 6). Includes failure injection + resume-from-checkpoint."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from s_crawler_spark.corpus import seed_search_url
@@ -183,57 +184,74 @@ def test_fetch_parse_lineage_shape(spark, pages):
     assert by_stage["payload"][1] == fetched.filter(F.col("downloaded")).count()
 
 
-def test_crawl_commits_lineage_table(spark, pages, tmp_path):
-    from pyspark.sql import functions as F
-    from s_crawler_spark.corpus import seed_search_url
-    from s_crawler_spark.plans import wave as wv
-    from s_crawler_spark.sources.store import SnapshotStore
-
-    store = SnapshotStore(str(tmp_path / "st"))
-    wv.crawl(spark, pages, seed_search_url(), store,
-             wave_seconds=150, max_waves=12, n_shards=4)
-    lin = store.read(spark, "lineage")
-    assert lin.count() > 0
-    assert {"stage", "partition_id", "n_fetched", "n_parsed", "parse_ms",
-            "wave"} <= set(lin.columns)
-
-
-def test_fetch_parse_beyond_broadcast_switch(spark, pages):
-    """broadcast_keys=False (the beyond-broadcast wave-size config switch)
-    must produce the identical fetch result — Catalyst picks the join
-    strategy, the dataflow doesn't change."""
-    from s_crawler_spark.corpus import seed_search_url
-    from s_crawler_spark.operators import dedup as dd
-    from s_crawler_spark.plans import wave as wv
-
-    cand = wv.collect_candidates(pages, seed_search_url())
-    fresh = dd.first_occurrence(cand, "doi", "seq")
-    a = wv.fetch_parse(pages, fresh).orderBy("seq").collect()
-    b = wv.fetch_parse(pages, fresh, broadcast_keys=False) \
-        .orderBy("seq").collect()
-    assert [(r["seq"], r["doi"], r["content_md5"], r["downloaded"])
-            for r in a] == \
-           [(r["seq"], r["doi"], r["content_md5"], r["downloaded"])
-            for r in b]
+@pytest.fixture(scope="module")
+def wave_log_store(spark, pages, tmp_path_factory):
+    """A composed crawl whose one ledger, ``wave_log``, the two tests below
+    read: per wave its frontier status counts, the per-partition
+    fetch/parse lineage of the three hops, and one commit row per table
+    the wave committed."""
+    store = SnapshotStore(str(tmp_path_factory.mktemp("wl")))
+    crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
+          max_waves=12, n_shards=4, adaptive_delay=True, trap_guard=True,
+          compact_every=2)
+    n_waves = store.committed_wave() + 1
+    assert n_waves >= 3
+    return store, n_waves, store.read(spark, "wave_log").collect()
 
 
-def test_crawl_commits_phase_log(spark, pages, tmp_path):
-    """A3: the per-wave phase ledger (reference step-timing analogue) is
-    committed alongside the other snapshots."""
-    from s_crawler_spark.corpus import seed_search_url
-    from s_crawler_spark.plans import wave as wv
-    from s_crawler_spark.sources.store import SnapshotStore
+def test_crawl_commits_lineage_table(spark, wave_log_store):
+    """The lineage rows of every wave live in ``wave_log``: one composed
+    read gives each hop's per-partition counts beside the wave's status
+    counts. The store's first ledger snapshot is full, every later one an
+    appended delta."""
+    store, n_waves, rows = wave_log_store
+    snaps = store.snapshots("wave_log")
+    assert [s["wave"] for s in snaps] == list(range(n_waves))
+    assert [s["mode"] for s in snaps] == ["full"] + ["delta"] * (n_waves - 1)
+    assert not any(s.get("key") for s in snaps)
+    assert store.read(spark, "wave_log").columns == \
+        ["phase", "part", "metric", "value", "wave"]
 
-    store = SnapshotStore(str(tmp_path / "ph"))
-    wv.crawl(spark, pages, seed_search_url(), store,
-             wave_seconds=3600, max_waves=3, n_shards=4)
-    log = store.read(spark, "phase_log")
-    rows = log.collect()
-    assert rows
-    phases = {r["phase"] for r in rows}
-    assert {"frontier", "articles", "seen", "candidates", "seen_shards",
-            "fetch_log", "lineage"} <= phases
-    assert all(r["ms"] >= 0 for r in rows)
+    for w in range(n_waves):
+        mine = [r for r in rows if r["wave"] == w]
+        status = {(r["metric"], r["value"]) for r in mine
+                  if r["phase"] == "status"}
+        exp = {(r["status"], r["count"]) for r in
+               store.read(spark, "frontier", as_of_wave=w)
+               .groupBy("status").count().collect()}
+        assert status == exp, (w, status, exp)
+        assert all(r["part"] is None for r in mine if r["phase"] == "status")
+
+        hops = [r for r in mine if r["phase"] in ("detail", "viewer",
+                                                  "payload")]
+        assert {r["phase"] for r in hops} == {"detail", "viewer",
+                                               "payload"}, w
+        for hop in ("detail", "viewer", "payload"):
+            parts = {r["part"] for r in hops if r["phase"] == hop}
+            assert all(p is not None and p >= 0 for p in parts)
+            want = {"n_fetched", "n_parsed"} | (
+                set() if hop == "payload" else {"parse_ms"})
+            got = [(r["part"], r["metric"]) for r in hops
+                   if r["phase"] == hop]
+            assert sorted(got) == sorted((p, m) for p in parts
+                                         for m in want), (w, hop)
+        assert all(r["value"] >= 0 for r in hops)
+    assert {r["phase"] for r in rows} == {"status", "commit", "detail",
+                                          "viewer", "payload"}
+
+
+def test_crawl_commits_phase_log(wave_log_store):
+    """The per-wave commit timings (reference step-timing analogue) live in
+    ``wave_log``: one row per table each wave committed."""
+    store, n_waves, rows = wave_log_store
+    tables = [t for t in store.tables() if t != "wave_log"]
+    for w in range(n_waves):
+        mine = [r for r in rows if r["wave"] == w and r["phase"] == "commit"]
+        committed = [t for t in tables
+                     if any(s["wave"] == w for s in store.snapshots(t))]
+        assert sorted(r["metric"] for r in mine) == sorted(committed), w
+        assert all(r["part"] is None for r in mine)
+        assert all(r["value"] >= 0 for r in mine)
 
 
 def test_adaptive_delay_crawl(spark, pages, pages_dict, tmp_path):
@@ -388,7 +406,7 @@ def test_adaptive_policy_delta_commits_are_outcome_hosts(spark, pages,
 def test_snapshot_expiry_bounds_storage_and_resumes(spark, pages, pages_dict,
                                                     tmp_path):
     """expire_keep bounds every state table to `keep` snapshots while the
-    per-wave ledgers (fetch_log/lineage/phase_log) keep full history, and
+    per-wave ledger (wave_log) keeps full history, and
     a crash-resume from the expired store still reproduces the reference
     crawl exactly."""
     import os
@@ -408,8 +426,7 @@ def test_snapshot_expiry_bounds_storage_and_resumes(spark, pages, pages_dict,
         on_disk = {d for d in os.listdir(tmp_path / "exp" / t)
                    if d.startswith("snap-")}
         assert on_disk == live, t
-    for t in ("fetch_log", "lineage", "phase_log"):
-        assert len(store.snapshots(t)) == n_waves, t  # ledger untouched
+    assert len(store.snapshots("wave_log")) == n_waves  # ledger untouched
     cat = crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
                 max_waves=30, n_shards=4, expire_keep=2, compact_every=1)
     assert_parity(cat.collect(), sim)
@@ -434,8 +451,7 @@ def test_delta_crawl_storage_bounded(spark, pages, pages_dict, tmp_path):
         assert all(s["id"] > fulls[0]["id"]
                    for s in snaps if s["mode"] == "delta"), t
         assert len(snaps) <= 2, t  # newest full + at most one delta here
-    for t in ("fetch_log", "lineage", "phase_log"):
-        assert len(store.snapshots(t)) == n_waves, t  # ledger untouched
+    assert len(store.snapshots("wave_log")) == n_waves  # ledger untouched
     cat = crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
                 max_waves=30, n_shards=4, expire_keep=1, compact_every=2)
     assert_parity(cat.collect(), sim)
@@ -536,11 +552,11 @@ def test_trap_guard_fixpoint_break(spark, tmp_path):
 
 
 def test_fetch_log_incremental_counts_exact(spark, pages, pages_dict, tmp_path):
-    """fetch_log status metrics are maintained incrementally (O(wave)
+    """wave_log status counts are maintained incrementally (O(wave)
     arithmetic per wave, no full-frontier groupBy scan) — every committed
     wave's rows must equal a from-scratch recount of the frontier as of
     that wave, including across a crash/resume (the counter re-seeds from
-    the committed state, so a crash between the frontier and fetch_log
+    the committed state, so a crash between the frontier and wave_log
     commits can never leave drift)."""
     sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
     store = SnapshotStore(str(tmp_path / "fl"))
@@ -551,12 +567,12 @@ def test_fetch_log_incremental_counts_exact(spark, pages, pages_dict, tmp_path):
     cat = crawl(spark, pages, seed_search_url(), store,
                 wave_seconds=100, max_waves=30, n_shards=4)
     assert_parity(cat.collect(), sim)
-    snaps = store.snapshots("fetch_log")
-    assert len(snaps) >= 3
-    for s in snaps:
-        w = s["wave"]
-        got = {(r["status"], r["count"]) for r in
-               store.read_snapshot_raw(spark, "fetch_log", w).collect()}
+    status = store.read(spark, "wave_log") \
+        .filter(F.col("phase") == "status").collect()
+    n_waves = store.committed_wave() + 1
+    assert n_waves >= 3
+    for w in range(n_waves):
+        got = {(r["metric"], r["value"]) for r in status if r["wave"] == w}
         exp = {(r["status"], r["count"]) for r in
                store.read(spark, "frontier", as_of_wave=w)
                .groupBy("status").count().collect()}

@@ -53,14 +53,14 @@ def main() -> None:
                     wave_seconds=WAVE_SECONDS, max_waves=40, n_shards=8,
                     compact_every=compact_every)
         n_articles = cat.count()
+        ms = {r["wave"]: r["value"] for r in store.read(spark, "wave_log")
+              .filter("phase = 'commit' AND metric = 'frontier'").collect()}
         rows_per_wave, ms_per_wave, modes = [], [], []
         for s in store.snapshots("frontier"):
             w = s["wave"]
             rows_per_wave.append(
                 store.read_snapshot_raw(spark, "frontier", w).count())
-            pl = store.read_snapshot_raw(spark, "phase_log", w)
-            ms = {r["phase"]: r["ms"] for r in pl.collect()}
-            ms_per_wave.append(ms.get("frontier", -1))
+            ms_per_wave.append(ms[w])
             modes.append(s["mode"])
         total_rows = store.read(spark, "frontier").count()
         print(f"\n== {mode} (compact_every={compact_every}) — "

@@ -3,11 +3,11 @@
 VERDICT r04 "What's wrong" #2: the multiwave loop carries ~6-8 s/wave of
 orchestration at small waves — ~9 separate per-table commit jobs plus the
 compose-read barriers — unmeasured per phase. One composed crawl keeps its
-store; the phase_log the loop already commits (one row per per-table
-commit job, ms of that job's write action) is pivoted into a wave x table
-breakdown, plus the wave's commit-critical-path wall (time from first
-commit start to the durable pointer flip, sampled by an instrumented
-store).
+store; the commit rows of the wave_log ledger the loop already writes (one
+per per-table commit job, ms of that job's write action) are pivoted into
+a wave x table breakdown, plus the wave's commit-critical-path wall (time
+from first commit start to the durable pointer flip, sampled by an
+instrumented store).
 
 Usage: taskset -c 0-7 python tools/bench_wave_phases.py [sf_dir]
        (default sf_dir: the sf0.01 fixture; SPARK_GRAFT_CPUS sets local[N])
@@ -68,12 +68,10 @@ def main() -> None:
         t0 = time.perf_counter()
         crawl(spark, pages, seed, store, **WAVE_KW)
         profile_wall = time.perf_counter() - t0
-        # ledger tables snapshot per wave (the composed read shows the
-        # newest wave; history is the per-wave raw snapshots)
-        plog = [(r["wave"], r["phase"], r["ms"])
-                for s in store.snapshots("phase_log")
-                for r in store.read_snapshot_raw(
-                    spark, "phase_log", s["wave"]).collect()]
+        # one read of the ledger holds every wave's commit rows
+        plog = [(r["wave"], r["metric"], r["value"])
+                for r in store.read(spark, "wave_log")
+                .filter("phase = 'commit'").collect()]
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -52,8 +52,9 @@ def audit(name: str, plan: str, checks: list[tuple[str, bool]]) -> bool:
     return ok
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
+    """Run every audit; 0 when all checks pass. Reuses the active Spark
+    session if there is one (tests/test_explain_audit.py)."""
     from pyspark.sql import functions as F
 
     from s_crawler_spark.corpus import seed_search_url, synthesize_pages
@@ -754,4 +755,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(*sys.argv[1:2]))
