@@ -13,7 +13,8 @@ src/database_manager.py:177-189) with the north rule's 10^10-key design:
   ~1% false positives) shuffle into the exact backstop join.
 
 Sizing: 10^10 keys at 10 bits/key ≈ 12.5 GB of filter split into shards of
-``SHARD_TARGET_ITEMS`` keys (~2^27 → ~160 MB/shard); shards are co-partitioned
+about 2^27 keys (~160 MB/shard), so choose ``n_shards`` ≈ expected seen keys
+/ 2^27 (10^10 keys → about 75); shards are co-partitioned
 with candidates by ``pmod(url_hash, n_shards)`` so the probe is a 1:1
 shard-local join + Arrow kernel — no broadcast of the full filter, no skew
 (hash sharding is uniform by construction).
@@ -32,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-SHARD_TARGET_ITEMS = 1 << 27  # keys per shard at full scale
 DEFAULT_BITS_PER_KEY = 10     # ~1% fp at k=7
 DEFAULT_K = 7
 
@@ -52,21 +52,6 @@ _MIX = np.uint64(0x9E3779B97F4A7C15)
 # top 16 bits are 0 for every key below 2^48, so all such keys shared one
 # fingerprint and one bucket pair, and 9 of them overflowed a build.
 FILTER_REV = 3
-
-
-def auto_shard_count(n_keys: int,
-                     target_items: int = SHARD_TARGET_ITEMS) -> int:
-    """Smallest power-of-two shard count keeping ≤ ``target_items`` keys per
-    shard — the sizing policy behind ``crawl(n_shards="auto")``. Power-of-two
-    snapping is the hysteresis: as the seen set grows, the desired count only
-    changes at doublings, so a growing crawl re-lays its filter table
-    O(log growth) times total (each rebuild is the one O(seen) pass the
-    layout-mismatch path already pays), not once per wave. The count is a
-    ROUTING modulus (pmod key), unrelated to the cuckoo in-blob bucket count
-    — no power-of-two requirement exists for correctness, it exists for
-    rebuild amortization."""
-    need = -(-max(1, n_keys) // max(1, target_items))  # ceil div, >= 1
-    return 1 << (need - 1).bit_length()
 
 
 def _mix64(keys: np.ndarray) -> np.ndarray:

@@ -252,11 +252,19 @@ def duplicated_spans(docs: DataFrame, n: int = DUP_SPAN_N,
     drive the standard "drop or trim documents past X% duplicated"
     filter. Integer basis points; exact SQL oracle.
 
-    Scale shape: the occurrence table is (doc_id, pos, hash64) — one
-    id-only row per token position, never gram STRINGS past the map side
-    (the hash is computed inside the scan projection). Three key-hash
+    Gram key: ``md5_hash60`` reduced mod 2^31 − 1, so the key is 31 bits
+    wide and distinct grams collide. Two grams that share a key count as
+    one, so a gram that occurs once is marked duplicated when its key
+    twin occurs at all: with N distinct grams about N² / 2^32 key pairs
+    collide. On the sf0.1 documents this puts 169,815 distinct 20-grams
+    into 8 colliding buckets and falsely marks 15 grams. The SQL oracle
+    uses the same reduced key, so it cannot see these.
+
+    Scale shape: the occurrence table is (doc_id, pos, gh) — one id-only
+    row per token position, never gram STRINGS past the map side (the
+    key is computed inside the scan projection). Three key-hash
     shuffles, all id-sized: the corpus-wide gram count (map-side partial
-    agg on the 64-bit hash), the mark join back (hash → positions), and
+    agg on the gram key), the mark join back (key → positions), and
     the per-doc window (positions sort within their own document). No
     all-pairs stage, no suffix array — the n-gram-anchor relaxation of
     the paper's suffix automaton, exact for runs ≥ n by construction

@@ -45,12 +45,6 @@ from ..sources.store import SnapshotStore
 
 LOGICAL_T0 = datetime(2024, 6, 1)
 
-# compact_every="auto" thresholds: compact when the frontier delta chain's
-# accumulated rows reach COMPACT_FRAC_BP basis points of the live frontier,
-# or when the chain reaches COMPACT_CHAIN_CAP snapshots
-COMPACT_FRAC_BP = 2500
-COMPACT_CHAIN_CAP = 64
-
 # the crawl's one ledger, long form: per wave the frontier status counts
 # (phase "status"), the three hops' per-partition fetch/parse lineage
 # (phase = hop, part = partition id) and each commit's ms (phase "commit")
@@ -66,8 +60,7 @@ def _content_fp(df: DataFrame, *cols) -> tuple:
     truncated sum AND full-width xor — rules_fp gates a correctness
     decision (re-binding stored robots_ok bits on resume), which a
     31-bit-sum-only scheme made needlessly collidable. One bounded
-    collect. Shared by the rules fingerprint and the discovery
-    fingerprint so the hash scheme cannot drift between them."""
+    collect."""
     h = F.xxhash64(*cols)
     row = df.select(
         F.count(F.lit(1)).alias("n"),
@@ -269,12 +262,12 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
           max_count: int | None = None,
           wave_seconds: int = 3600,
           host_policy: DataFrame | None = None,
-          n_shards: int | str = 8,
+          n_shards: int = 8,
           max_waves: int = 50,
           adaptive_delay: bool = False,
           expire_keep: int | None = None,
           trap_guard: bool = False,
-          compact_every: int | str = 8,
+          compact_every: int = 8,
           priority_df: DataFrame | None = None) -> DataFrame:
     """Run (or resume) a full crawl to completion. Every wave commits
     frontier / seen / seen_shards / articles snapshots and appends its rows
@@ -335,46 +328,20 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
     re-seeds it with one scan (and the next commit is full, re-anchoring
     the delta chain).
 
-    ``n_shards="auto"`` sizes the seen-filter shard layout from the live
-    seen-set size instead of a fixed modulus: each wave targets
-    ``seen.SHARD_TARGET_ITEMS`` keys per shard (seen.auto_shard_count —
-    smallest power of two, GROW-ONLY so an established layout never churns
-    downward). Growth reuses the existing layout-change machinery — the
-    wave whose desired count exceeds the stored one full-rebuilds the
-    table under the new modulus, every other wave folds touched-shard
-    deltas — and power-of-two snapping bounds total rebuilds at
-    O(log growth) over the crawl's life. Probes always use the STORED
-    layout, so mid-crawl growth never mis-routes a candidate. This is the
-    10^10 default posture: a crawl that outgrows its seed sizing by 1000×
-    keeps ≤ target keys per blob with no retuning or manual resume.
+    ``n_shards`` is the seen-filter shard modulus (pmod of url_hash). Pick
+    it from the expected seen-set size: about 2^27 keys per shard keeps
+    each blob near 160 MB (operators/seen.py). A resume with a different
+    value rebuilds the shard table once under the new modulus; probes
+    always use the stored layout until then.
 
-    ``compact_every="auto"`` replaces the fixed compaction cadence with the
-    LSM size-ratio policy: compact when the frontier delta chain's
-    accumulated rows reach ``COMPACT_FRAC_BP`` basis points of the live
-    frontier (25%), or when the chain reaches ``COMPACT_CHAIN_CAP``
-    snapshots (bounds merge-on-read compose cost and
-    manifest length regardless of row ratio). A fixed cadence rewrites the
-    O(total) base every N waves — at a 10^10-row frontier with 10^6-row
-    waves that is ~10^9 rows/wave of amortized write amplification, which
-    re-creates the very cost the delta layer removed; the ratio policy
-    amortizes every compaction against the deltas that earned it, so total
-    compaction write volume is O(total × log) over the crawl's life
-    exactly like an LSM tree. Decision inputs are the incrementally-
-    maintained counters plus per-delta row counts recorded in the snapshot
-    manifest (``meta.n_delta``) — no extra scans — and a resumed crawl
-    re-seeds the chain statistics from the manifest, so the schedule is a
-    pure function of committed state (legacy delta snapshots without the
-    meta count as 0 rows; the chain cap still bounds them).
+    ``compact_every`` is the compaction cadence in absolute wave numbers,
+    so a resumed crawl compacts on the waves an uninterrupted one would.
+    Each full commit rewrites the O(total) base once per ``compact_every``
+    waves; choose it so that rewrite stays amortised over the deltas in
+    between (SCALE.md).
 
     Returns the final articles catalog in crawl order.
     """
-    auto_shards = isinstance(n_shards, str)
-    if auto_shards and n_shards != "auto":
-        raise ValueError(f"n_shards must be an int or 'auto', got {n_shards!r}")
-    compact_auto = isinstance(compact_every, str)
-    if compact_auto and compact_every != "auto":
-        raise ValueError(
-            f"compact_every must be an int or 'auto', got {compact_every!r}")
     start_wave = 0
     frontier_df = catalog = seen_df = cand_store = policy_df = None
     trap_state_df = None  # per-host pending-backlog trap counts (trap_guard)
@@ -445,22 +412,10 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
                         F.col("status") == fr.STATUS_PENDING)) \
                     .localCheckpoint(eager=False)  # 3 first-wave consumers
 
-    # auto-compaction chain statistics: length and accumulated row count of
-    # the frontier delta chain since the last full snapshot. Seeded from the
-    # committed manifest (per-delta row counts ride in meta.n_delta), then
-    # maintained in-process — the schedule is a pure function of committed
-    # state, so a resumed crawl compacts exactly where the uninterrupted
-    # one would. Legacy deltas without the meta count as 0 rows; the chain
-    # cap still bounds them.
-    chain_len = delta_since_full = 0
-    if compact_auto:
-        for s in reversed(store.snapshots("frontier")):
-            if s.get("mode", "full") != "delta":
-                break
-            chain_len += 1
-            delta_since_full += int(s.get("meta", {}).get("n_delta") or 0)
-
     meta_cols = ["url", "title", "doi", "journal", "publication_date", "authors"]
+    # every seen_shards snapshot records the layout and kernel it was built
+    # under; the probe and the rebuild check below read them back
+    shard_meta = {"n_shards": n_shards, "filter_rev": sn.FILTER_REV}
 
     if host_policy is not None:
         # ONE row per host before anything consumes the dimension:
@@ -532,46 +487,33 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
                 pre_collapsed=True).localCheckpoint(eager=False)
             frontier_needs_full = True
 
-    # discovery fingerprint (per process): a cheap url-COLUMN aggregate over
-    # the seed's search-page family. When it is unchanged since this
-    # process' last full discovery scan AND max_count is None, re-running
-    # discovery yields nothing new — every card of every already-scanned
-    # page is in candidates/seen, and the catalog anti-join only ever
-    # REMOVES candidates — so the per-wave O(listing) HTML parse is
-    # skipped outright (the fp agg reads only the pushed-down url column,
-    # no binary html I/O). This rests on the engine's corpus contract:
-    # ``pages`` is an IMMUTABLE snapshot within one crawl() invocation (a
-    # mutated page body at an unchanged URL is invisible to a url-column
-    # fingerprint); content changes arrive via a new crawl() call, whose
-    # first wave ALWAYS re-scans (idempotent — enqueue-dedup drops
-    # re-discoveries; pytest pins the grown-corpus resume). With max_count
-    # set the full re-scan is kept: truncation picks the top-k of the
-    # CURRENT candidate set, which changes as the catalog grows.
-    last_disc_fp = None
+    # discovery runs once per crawl() call. ``pages`` is an IMMUTABLE
+    # snapshot within one call (the engine's corpus contract), so after the
+    # call's first scan re-running discovery yields nothing new — every
+    # card of every scanned page is in candidates/seen, and the catalog
+    # anti-join only ever REMOVES candidates — and later waves skip the
+    # O(listing) HTML parse outright. Corpus changes arrive via a new
+    # crawl() call, whose first wave always scans (idempotent —
+    # enqueue-dedup drops re-discoveries; pytest pins the grown-corpus
+    # resume). With max_count set every wave re-scans: truncation picks
+    # the top-k of the CURRENT candidate set, which changes as the
+    # catalog grows.
+    discovered = False
     cand_schema = None  # discovery output schema — wave-invariant,
     # resolved once (analysis only) the first time a wave skips
 
     for wave in range(start_wave, max_waves):
         logical_now = LOGICAL_T0 + timedelta(seconds=wave * wave_seconds)
         # wave 0 (or the first commit after an empty store) writes the base;
-        # fixed cadence: every compact_every-th wave compacts the delta
-        # chain into a fresh full snapshot — absolute wave number, so a
-        # resumed crawl compacts on the same schedule it would have
-        # uninterrupted. "auto" leaves the decision provisional here and
-        # finalizes it after this wave's delta is counted (nothing between
-        # this point and the commit section reads is_full).
+        # every compact_every-th wave compacts the delta chain into a fresh
+        # full snapshot — absolute wave number, so a resumed crawl compacts
+        # on the same schedule it would have uninterrupted
         is_full = (frontier_df is None or frontier_needs_full
-                   or (not compact_auto
-                       and (compact_every <= 1
-                            or wave % compact_every == 0)))
+                   or compact_every <= 1 or wave % compact_every == 0)
 
         # --- discovery + enqueue (idempotent: seen-set dedups re-discovery) ---
-        disc_fp = None
-        if max_count is None:
-            disc_fp = _content_fp(search_pages(pages, seed_url),
-                                  F.col("url"))
-        if disc_fp is not None and disc_fp == last_disc_fp:
-            # page set unchanged since this process' last scan: discovery
+        if discovered and max_count is None:
+            # this call already scanned the (immutable) pages: discovery
             # is a no-op by construction — schema-only empty stand-in
             # (catalog=None path: analysis only, nothing executes)
             if cand_schema is None:
@@ -581,7 +523,7 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         else:
             cand = collect_candidates(pages, seed_url, wave=wave,
                                       max_count=max_count, catalog=catalog)
-            last_disc_fp = disc_fp
+            discovered = True
         cand = cand.withColumn("url_hash", scalars.canonical_url_hash(F.col("url")))
         shards_df = store.read(spark, "seen_shards")
         # the committed shard layout's modulus (None: no table yet, or a
@@ -794,36 +736,6 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             r["n_virgin"] for r in delta_agg
             if r["status"] == fr.STATUS_PENDING)
 
-        # shard layout this wave's seen_shards commit targets. "auto": size
-        # from the live seen count (terminal frontier rows — the exact row
-        # set the blobs are built from), grow-only against the stored
-        # layout so an established table never churns downward; the
-        # power-of-two snap in auto_shard_count makes growth a doubling
-        # event, so the one O(seen) rebuild per layout change amortizes to
-        # O(log growth) rebuilds total. Free: status_counts is already
-        # maintained incrementally — no extra scan, no extra job.
-        if auto_shards:
-            n_seen_now = (status_counts.get(fr.STATUS_DONE, 0)
-                          + status_counts.get(fr.STATUS_FAILED, 0))
-            ns_commit = max(stored_ns or 1,
-                            sn.auto_shard_count(n_seen_now,
-                                                sn.SHARD_TARGET_ITEMS))
-        else:
-            ns_commit = n_shards
-
-        # auto-compaction: the LSM size-ratio trigger, finalized now that
-        # this wave's delta is counted. Compact when the chain's
-        # accumulated delta rows (including this wave's) reach
-        # COMPACT_FRAC_BP of the live frontier — so every base rewrite is
-        # amortized against the deltas that earned it — or when the chain
-        # hits the hard cap that bounds merge-on-read compose cost. Pure
-        # counter arithmetic; no extra jobs.
-        if compact_auto and not is_full and n_delta:
-            total_rows = sum(status_counts.values())
-            is_full = (chain_len + 1 > COMPACT_CHAIN_CAP
-                       or (delta_since_full + n_delta) * 10000
-                       >= total_rows * COMPACT_FRAC_BP)
-
         # commit this wave's state (checkpoint = resumability) as ONE
         # multi-table transaction: the task list is built single-threaded
         # (all plan construction on the driver), then the per-table writes
@@ -866,8 +778,8 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             commit_task(seen_all, "seen")
             commit_task(cand_all, "candidates")
             # headroom so the following delta waves can fold keys in place
-            commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0),
-                        "seen_shards", meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
+            commit_task(sn.build_shards(seen_all, n_shards, headroom=2.0),
+                        "seen_shards", meta=shard_meta)
         else:
             # empty-delta skips: delta_agg told us exactly what changed.
             # A skipped table keeps its composed view from the last barrier
@@ -875,36 +787,33 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
             # pointer, not latest_wave — so sparse per-table wave numbering
             # is fine.
             if n_delta:
-                # n_delta in the manifest: the auto-compaction resume seed
-                # reads the chain's row counts from committed state
                 commit_task(frontier_delta, "frontier",
                             mode="delta", key=["url_hash"],
-                            meta={"rules_fp": rules_fp, "n_delta": n_delta})
+                            meta={"rules_fp": rules_fp})
             if n_done:
                 commit_task(new_articles, "articles", mode="delta")
             if n_term:
                 commit_task(seen_delta, "seen", mode="delta")
             if n_enq:
                 commit_task(new_meta, "candidates", mode="delta")
-            if shards_df is None or stored_ns != ns_commit:
+            if shards_df is None or stored_ns != n_shards:
                 # no shard table yet (externally seeded store), a layout
-                # predating the n_shards metadata, a resume with a
-                # DIFFERENT n_shards, or an auto-shards growth event:
-                # incremental folds would OR keys into blobs laid out
-                # under the old modulus (persistent false negatives) —
-                # rebuild the whole table once under the current layout,
-                # O(seen) exactly once per layout change
-                commit_task(sn.build_shards(seen_all, ns_commit, headroom=2.0),
-                            "seen_shards", meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
+                # predating the n_shards metadata, or a resume with a
+                # DIFFERENT n_shards: incremental folds would OR keys into
+                # blobs laid out under the old modulus (persistent false
+                # negatives) — rebuild the whole table once under the
+                # current layout, O(seen) exactly once per layout change
+                commit_task(sn.build_shards(seen_all, n_shards, headroom=2.0),
+                            "seen_shards", meta=shard_meta)
             elif n_term:
                 # fold this wave's new keys into ONLY the shards they touch;
                 # untouched blobs are carried forward by the manifest, unread
                 commit_task(sn.update_shards(shards_df,
                                              seen_delta.select("url_hash"),
-                                             seen_all, ns_commit,
+                                             seen_all, n_shards,
                                              headroom=2.0),
                             "seen_shards", mode="delta", key=["shard_id"],
-                            meta={"n_shards": ns_commit, "filter_rev": sn.FILTER_REV})
+                            meta=shard_meta)
 
         if adaptive_delay:
             # AIMD politeness update from this wave's per-host outcomes;
@@ -986,16 +895,6 @@ def crawl(spark: SparkSession, pages: DataFrame, seed_url: str,
         # wave can never tear. Must precede expiry — expiring first could
         # drop the base a rollback of this very wave would need to compose.
         store.mark_wave_committed(wave)
-
-        # auto-compaction chain accounting for the NEXT wave's decision:
-        # a full resets the chain; a committed frontier delta extends it;
-        # a wave that skipped its frontier commit leaves it untouched
-        if compact_auto:
-            if is_full:
-                chain_len = delta_since_full = 0
-            elif n_delta:
-                chain_len += 1
-                delta_since_full += n_delta
 
         # wave barrier: state views now come from the committed snapshots —
         # but only tables this wave actually changed are re-read (re-reading

@@ -184,13 +184,36 @@ def test_fetch_parse_lineage_shape(spark, pages):
     assert by_stage["payload"][1] == fetched.filter(F.col("downloaded")).count()
 
 
+class JobCountingStore(SnapshotStore):
+    """Counts the Spark jobs of each wave: the job ids the status tracker
+    knows at a wave's pointer flip minus those it knew at the previous flip
+    (the arming flip at wave -1 opens the count, so wave 0 includes the
+    crawl's set-up). No crawl test sets a job group, so every job of the
+    crawl, the commit pool's included, is ungrouped."""
+
+    def __init__(self, root, sc):
+        super().__init__(root)
+        self.sc = sc
+        self.known: set[int] = set()
+        self.wave_jobs: dict[int, int] = {}
+
+    def mark_wave_committed(self, wave):
+        # job starts reach the status tracker through the listener bus
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = set(self.sc.statusTracker().getJobIdsForGroup(None))
+        self.wave_jobs[wave] = len(ids - self.known)
+        self.known = ids
+        super().mark_wave_committed(wave)
+
+
 @pytest.fixture(scope="module")
 def wave_log_store(spark, pages, tmp_path_factory):
-    """A composed crawl whose one ledger, ``wave_log``, the two tests below
+    """A composed crawl whose one ledger, ``wave_log``, the tests below
     read: per wave its frontier status counts, the per-partition
     fetch/parse lineage of the three hops, and one commit row per table
-    the wave committed."""
-    store = SnapshotStore(str(tmp_path_factory.mktemp("wl")))
+    the wave committed. Its store also counts each wave's Spark jobs."""
+    store = JobCountingStore(str(tmp_path_factory.mktemp("wl")),
+                             spark.sparkContext)
     crawl(spark, pages, seed_search_url(), store, wave_seconds=100,
           max_waves=12, n_shards=4, adaptive_delay=True, trap_guard=True,
           compact_every=2)
@@ -252,6 +275,24 @@ def test_crawl_commits_phase_log(wave_log_store):
         assert sorted(r["metric"] for r in mine) == sorted(committed), w
         assert all(r["part"] is None for r in mine)
         assert all(r["value"] >= 0 for r in mine)
+
+
+# Spark jobs per wave of the wave_log_store crawl. Lower an entry when a
+# change removes jobs; raise one only with a change that adds a job on
+# purpose, and say why there. The counts still grow with the delta chain:
+# every snapshot read runs one schema-inference job. Wave 0 ran 61 jobs
+# when only the wave_log_store tests ran and 62 in a full-suite session.
+WAVE_JOB_BUDGET = [62, 78, 100]
+
+
+def test_crawl_jobs_per_wave_within_budget(wave_log_store):
+    """No wave of the composed crawl runs more Spark jobs than its entry
+    in WAVE_JOB_BUDGET."""
+    store, n_waves, _ = wave_log_store
+    jobs = [store.wave_jobs[w] for w in range(n_waves)]
+    assert len(jobs) == len(WAVE_JOB_BUDGET), jobs
+    assert all(j <= b for j, b in zip(jobs, WAVE_JOB_BUDGET)), \
+        (jobs, WAVE_JOB_BUDGET)
 
 
 def test_adaptive_delay_crawl(spark, pages, pages_dict, tmp_path):
@@ -602,113 +643,6 @@ def test_resume_with_different_n_shards_rebuilds_layout(spark, pages,
     assert sorted(r["shard_id"] for r in
                   shards.select("shard_id").distinct().collect()) \
         == list(range(8))
-
-
-def test_auto_shards_grows_layout_and_matches_reference(spark, pages,
-                                                        pages_dict, tmp_path,
-                                                        monkeypatch):
-    """n_shards='auto' sizes the filter layout from the live seen count:
-    with a tiny per-shard target the layout must GROW across the crawl
-    (power-of-two rebuilds via the layout-change path), end at the size
-    auto_shard_count prescribes for the final seen set, and the catalog
-    must still match the reference exactly (probes use the stored layout,
-    so growth can never mis-route a candidate past the backstop)."""
-    from s_crawler_spark.operators import seen as sn
-
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    monkeypatch.setattr(sn, "SHARD_TARGET_ITEMS", 64)
-    store = SnapshotStore(str(tmp_path / "auto"))
-    cat = crawl(spark, pages, seed_search_url(), store,
-                wave_seconds=100, max_waves=30, n_shards="auto")
-    assert_parity(cat.collect(), sim)
-    metas = [s["meta"].get("n_shards")
-             for s in store.snapshots("seen_shards")]
-    # grow-only, and it actually grew (500 seen keys / 64 per shard → 16)
-    assert all(a <= b for a, b in zip(metas, metas[1:]))
-    assert metas[0] < metas[-1]
-    n_seen = store.read(spark, "seen").count()
-    assert metas[-1] == sn.auto_shard_count(n_seen, 64)
-    # the final committed layout spans its full id range (probe inference)
-    shards = store.read(spark, "seen_shards")
-    assert sorted(r["shard_id"] for r in
-                  shards.select("shard_id").distinct().collect()) \
-        == list(range(metas[-1]))
-
-
-def test_auto_shards_resume_keeps_stored_layout_when_no_growth(
-        spark, pages, pages_dict, tmp_path, monkeypatch):
-    """Resuming an auto-shards crawl (or switching a fixed-layout store to
-    'auto') must not churn the layout downward: grow-only means a stored
-    modulus larger than the auto-derived one is kept, and no-growth waves
-    take the incremental touched-shard delta path, not a rebuild."""
-    from s_crawler_spark.operators import seen as sn
-
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    store = SnapshotStore(str(tmp_path / "fixed_then_auto"))
-    crawl(spark, pages, seed_search_url(), store,
-          wave_seconds=100, max_waves=2, n_shards=32)
-    # auto would say 1 shard — the stored layout wins
-    monkeypatch.setattr(sn, "SHARD_TARGET_ITEMS", 10 ** 6)
-    cat = crawl(spark, pages, seed_search_url(), store,
-                wave_seconds=100, max_waves=30, n_shards="auto")
-    assert_parity(cat.collect(), sim)
-    snaps = store.snapshots("seen_shards")
-    assert all(s["meta"].get("n_shards") == 32 for s in snaps)
-    # post-switch waves fold deltas against the kept layout (no rebuild:
-    # at least one later snapshot is delta-mode)
-    assert any(s.get("mode") == "delta" for s in snaps[1:])
-
-
-def test_auto_compaction_chain_cap_and_parity(spark, pages, pages_dict,
-                                              tmp_path, monkeypatch):
-    """compact_every='auto' with the ratio trigger disabled (huge
-    COMPACT_FRAC_BP) must compact exactly on the chain cap: the frontier
-    snapshot sequence never carries more than COMPACT_CHAIN_CAP
-    consecutive deltas, every delta's manifest records its row count
-    (the resume seed), and the catalog still matches the reference."""
-    from s_crawler_spark.plans import wave as wv
-
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    monkeypatch.setattr(wv, "COMPACT_FRAC_BP", 10 ** 9)
-    monkeypatch.setattr(wv, "COMPACT_CHAIN_CAP", 2)
-    store = SnapshotStore(str(tmp_path / "autocompact"))
-    cat = crawl(spark, pages, seed_search_url(), store,
-                wave_seconds=100, max_waves=30, n_shards=4,
-                compact_every="auto")
-    assert_parity(cat.collect(), sim)
-    snaps = store.snapshots("frontier")
-    modes = [s.get("mode", "full") for s in snaps]
-    assert modes[0] == "full" and "delta" in modes and modes.count("full") >= 2
-    run = 0
-    for m in modes:
-        run = run + 1 if m == "delta" else 0
-        assert run <= 2
-    assert all(s["meta"].get("n_delta", 0) > 0
-               for s in snaps if s.get("mode") == "delta")
-
-
-def test_auto_compaction_resume_matches_uninterrupted_schedule(
-        spark, pages, pages_dict, tmp_path, monkeypatch):
-    """The auto-compaction schedule is a pure function of committed state:
-    a crawl stopped at a wave boundary and resumed must compact on exactly
-    the waves the uninterrupted run compacts on (chain statistics re-seed
-    from the manifests' n_delta), and both end reference-exact."""
-    from s_crawler_spark.plans import wave as wv
-
-    sim, _ = simulate_crawl(pages_dict, seed_search_url(), max_count=10**9)
-    monkeypatch.setattr(wv, "COMPACT_FRAC_BP", 10 ** 9)
-    monkeypatch.setattr(wv, "COMPACT_CHAIN_CAP", 3)
-    kw = dict(wave_seconds=100, n_shards=4, compact_every="auto")
-    st_a = SnapshotStore(str(tmp_path / "uninterrupted"))
-    cat_a = crawl(spark, pages, seed_search_url(), st_a, max_waves=30, **kw)
-    st_b = SnapshotStore(str(tmp_path / "resumed"))
-    crawl(spark, pages, seed_search_url(), st_b, max_waves=3, **kw)
-    cat_b = crawl(spark, pages, seed_search_url(), st_b, max_waves=30, **kw)
-    assert_parity(cat_a.collect(), sim)
-    assert_parity(cat_b.collect(), sim)
-    sig = lambda st: [(s["wave"], s.get("mode", "full"))
-                      for s in st.snapshots("frontier")]
-    assert sig(st_a) == sig(st_b)
 
 
 def test_crawl_with_no_matching_seed_terminates_gracefully(spark, tmp_path):

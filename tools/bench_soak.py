@@ -16,11 +16,6 @@ commits land):
 
 Usage: python tools/bench_soak.py [sf_dir] [wave_seconds] [max_waves]
        (defaults: /root/testdata/sf0.01, 60, 40)
-       SOAK_COMPACT=auto runs the LSM size-ratio policy instead of the
-       fixed cadence (thresholds: plans/wave.py COMPACT_FRAC_BP and
-       COMPACT_CHAIN_CAP) — the table then evidences the amortization
-       claim: compactions become rarer as the frontier grows while
-       per-wave compose cost stays bounded.
 
 Prints a per-wave table and ONE JSON summary line.
 """
@@ -40,8 +35,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 WAVE_SECONDS = int(sys.argv[2]) if len(sys.argv) > 2 else 60
 MAX_WAVES = int(sys.argv[3]) if len(sys.argv) > 3 else 40
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-COMPACT_EVERY: int | str = (
-    "auto" if os.environ.get("SOAK_COMPACT") == "auto" else 8)
+COMPACT_EVERY = 8
 EXPIRE_KEEP = 2
 
 
